@@ -1,11 +1,15 @@
-"""Cross-operator helpers shared by the dedup / text / sales / query
+"""Cross-operator helpers shared by the dedup / graph / text / sales / query
 layers (promoted from ``operators.dedup`` module-privates — ADVICE r12
 asked the query layer to stop importing a dedup internal).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from typing import Any, Callable
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def ensure_parallelism(df: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -43,3 +47,78 @@ def release_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+def converge(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    measure: Column,
+    done: Callable[[Any, Any], bool],
+    max_rounds: int,
+    prev: Any = None,
+) -> tuple[DataFrame, int, bool]:
+    """Iterate ``step`` from ``init`` until ``done(prev_m, m)`` holds for
+    a round's scalar ``m`` (``measure``, one aggregate over that
+    round's iterate), or for ``max_rounds`` rounds; ``prev`` is the
+    scalar the first round is compared against.  Returns the iterate
+    of the stopping round, its 1-based index (``max_rounds`` when the
+    cap binds) and whether ``done`` fired.  The one converge-until-
+    stable driver behind connected components, tolerance-stopped
+    PageRank and k-core peeling.
+
+    ``step`` must return its iterate LAZILY ``localCheckpoint``-ed:
+    the probe below is the action that materializes it, so a round
+    adds no job of its own and each iterate's plan stays O(1).
+
+    Batch schedule: rounds 1 and 2 are probed alone, later rounds in
+    pairs (1, 1, 2, 2, ...), so ONE collect drives two rounds.  The
+    loop's wall is per-action driver cost (py4j plan construction,
+    QueryExecution, AQE stage scheduling), not executor work; short
+    loops (star-shaped duplicate clusters converge by round 2–3) keep
+    single probes because pairing them only buys a wasted round
+    (dedup_decisions 3.0 → 3.2 s with unconditional pairs), while
+    long ones (entity-resolution chains, 10+ rounds) halve their
+    round-trips (fuzzy_part_entities_final 5.3 → 4.4 s).  Bound: at
+    most ONE wasted round past the stop, when it lands on the first
+    round of a pair; the stop index and the returned iterate are
+    still exactly the unbatched loop's.
+
+    Each round's aggregate carries an explicit round-index literal
+    ``j`` and the batch's scalars are read by index, so nothing
+    depends on Union preserving child order.
+
+    Release discipline: once a batch has materialized, every iterate
+    that can no longer be read is freed with
+    :func:`release_checkpoint` — the previous batch's survivor
+    (``init`` included), the non-final rounds of the batch and, on a
+    stop, the rounds past it.  Only the returned iterate's blocks stay
+    live; anything else the step reads (edge lists, setup frames)
+    belongs to the caller."""
+    cur, rounds = init, 0
+    while rounds < max_rounds:
+        batch = 1 if rounds < 2 else min(2, max_rounds - rounds)
+        iterates = [step(cur)]
+        for _ in range(batch - 1):
+            iterates.append(step(iterates[-1]))
+        probe = reduce(
+            lambda a, b: a.unionByName(b),
+            (
+                it.agg(measure.alias("m")).select(F.lit(j).alias("j"), "m")
+                for j, it in enumerate(iterates)
+            ),
+        )
+        by_j = {r["j"]: r["m"] for r in probe.collect()}
+        hit = None
+        for j in range(len(iterates)):
+            if done(prev, by_j[j]):
+                hit = j
+                break
+            prev = by_j[j]
+        keep = iterates[-1 if hit is None else hit]
+        for it in (cur, *iterates):
+            if it is not keep:
+                release_checkpoint(it)
+        if hit is not None:
+            return keep, rounds + hit + 1, True
+        cur, rounds = keep, rounds + batch
+    return cur, rounds, False

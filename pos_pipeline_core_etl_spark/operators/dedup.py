@@ -19,9 +19,16 @@ bit-for-bit:
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pos_pipeline_core_etl_spark.operators.common import (
+    converge,
+    ensure_parallelism,
+    release_checkpoint,
+)
 from pos_pipeline_core_etl_spark.operators.text import TOKEN_SPLIT_RE
 
 # Default MinHash parameters: k hash functions in b bands × r rows (k = b*r).
@@ -91,14 +98,6 @@ def shingle_id(sh: Column) -> Column:
 SHINGLE_ID_SQL = "CAST(('0x' || substr(md5({s}), 1, 8)) AS BIGINT)"
 
 
-# promoted to operators.common (ADVICE r12: the query layer imported a
-# dedup module-private); the underscore alias keeps in-module callers
-# and existing importers working
-from pos_pipeline_core_etl_spark.operators.common import (  # noqa: E402
-    ensure_parallelism as _ensure_parallelism,
-)
-
-
 def exact_survivors(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact-first staging, shared by every ``*_staged`` near-dup query:
     fingerprint dedup keeps the min doc_id per byte-identical group and
@@ -128,7 +127,7 @@ def minhash_signatures(
     docs: DataFrame, text_col: str = "text", k: int = MINHASH_K
 ) -> DataFrame:
     """doc_id → k minhash values (exploded-shingle groupBy, k min-aggs)."""
-    docs = _ensure_parallelism(docs)
+    docs = ensure_parallelism(docs)
     exploded = docs.select(
         "doc_id", F.explode(shingles_col(F.col(text_col))).alias("sh")
     ).withColumn("x", shingle_id(F.col("sh")))
@@ -268,11 +267,11 @@ def minhash_lsh_verified(
     # projection once per side — expression-id remapping defeats
     # exchange reuse), then reassemble each pair with conditional max
     # (exactly one non-null side per row, so the pick is deterministic).
-    # _ensure_parallelism here too, not just in the signature stage: a
+    # ensure_parallelism here too, not just in the signature stage: a
     # single-file corpus otherwise shingles on ONE task for the verify
     # leg (measured 3.3 s of the pipeline's 4.4 s at sf0.1 — the r3
     # bench tail was this, not AQE scheduling)
-    sh = _ensure_parallelism(docs).select(
+    sh = ensure_parallelism(docs).select(
         "doc_id", shingles_col(F.col(text_col)).alias("sh")
     )
     # explode, not union: a union would consume cands twice and recompute
@@ -349,7 +348,7 @@ def _sampled_postings(
     sf0.1 — and the sampled posting ids come from the same values.
     Set semantics are unchanged up to a ~2⁻⁶⁰ collision (none on any
     fixture; the recall audit recomputes both sides every round)."""
-    base = _ensure_parallelism(docs)
+    base = ensure_parallelism(docs)
     sh = base.select(
         "doc_id",
         F.transform(shingles_col(F.col(text_col)), window_id).alias("sh"),
@@ -499,7 +498,7 @@ def sparse_cosine_pairs(
     """
     from pos_pipeline_core_etl_spark.functions.rounding import hround
 
-    base = _ensure_parallelism(docs)
+    base = ensure_parallelism(docs)
     # r12 (guide §2.3 — shuffle keys, not payloads): grams are hashed
     # ONCE to the repo's 60-bit signed-BIGINT ids (window_id) straight
     # out of the explode, so the df count, the posting checkpoint, and
@@ -596,7 +595,7 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -
     if not 1 <= bits <= 60:
         raise ValueError(f"bits must be in [1, 60], got {bits}")
     hexw = 8 if bits <= 32 else 15
-    tokens = _ensure_parallelism(docs).select(
+    tokens = ensure_parallelism(docs).select(
         "doc_id",
         F.explode(
             F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE))
@@ -836,23 +835,6 @@ def simhash_banded_overflow(
 # transitive-closure survivorship (connected components)
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the storage blocks behind a ``localCheckpoint``-ed frame
-    once it can never be read again (the NEXT iterate has materialized).
-
-    ``DataFrame.unpersist()`` only clears cache-manager entries, not
-    checkpoint blocks, so iterative loops that checkpoint per round
-    otherwise leak one frame per round for the life of the job — the
-    round-10 ladder's 15M-key ER OOM.  The analyzed plan of a
-    checkpointed Dataset is exactly the ``LogicalRDD`` wrapping the
-    persisted blocks; anything else (a frame that was never
-    checkpointed) has no ``rdd`` accessor and is left alone."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -893,60 +875,32 @@ def connected_components(
     Memory shape (round 11, VERDICT r10 #3 — the 15M-key ER resolve
     OOM'd in THESE rounds at 64g over a 238M-pair graph):
 
-    - The edge list is materialized ONCE, symmetrized and
-      **hash-partitioned on the join key** in the SQL cache
-      (columnar-compressed MEMORY_AND_DISK — spills instead of growing
-      the heap).  The cache preserves that partitioning, so the
-      per-round join shuffles ONLY the node-sized labels; the pre-r12
-      forms re-exchanged the edge side every round (r11 held an
-      oriented checkpoint to halve the persisted footprint, but a
-      localCheckpoint forgets its partitioning, so every round paid a
-      2E-row exchange — strictly more disk+network per round than the
-      one-time symmetrized cache).
+    - The edge list is checkpointed ONCE, oriented (half the
+      symmetrized footprint); each round's join re-exchanges its lazily
+      symmetrized view, because a checkpoint forgets its partitioning.
+      A hash-partitioned symmetrized edge cache was measured slower
+      below ~10⁶ edges (sf0.1: 1.5 s → 2.7 s warm) and was removed.
     - Label checkpoints store **serialized** (PySpark's MEMORY_AND_DISK
       constant is the serialized level; the default localCheckpoint
       level is the DESER variant).
-    - The previous round's label checkpoint is **explicitly released**
-      (:func:`_release_checkpoint`) as soon as the new iterate has
-      materialized — the pre-r11 form leaked every round's blocks for
-      the life of the loop, which at ~24 halving rounds × node-sized
-      frames was the actual OOM, not the edge volume.
+    - Rounds run under :func:`~operators.common.converge`, which frees
+      every superseded label checkpoint as soon as the next iterate
+      has materialized — the pre-r11 form leaked every round's blocks,
+      which at ~24 halving rounds × node-sized frames was the actual
+      OOM, not the edge volume.
 
-    Per-round lazy ``localCheckpoint`` keeps the label plan O(1); the
-    convergence probe (min-propagation is monotone decreasing, so the
-    label sum strictly decreases until the fixed point — one cheap agg
-    on the fresh checkpoint) is the action that materializes it, so
-    each round costs ONE job.
+    The convergence probe is the label sum: min-propagation is
+    monotone decreasing, so the sum strictly decreases until the fixed
+    point.
     """
     from pyspark import StorageLevel
 
     oriented = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    # r12 optimization pass (guide §2.4): on a LARGE graph the dominant
-    # per-round byte mover is the edge side of the message join — the
-    # lazily symmetrized view re-crosses its exchange every round
-    # because a localCheckpoint forgets partitioning (LogicalRDD
-    # reports UnknownPartitioning — measured).  When
-    # ``spark.pos.cc.prepartitionEdges=true`` the symmetrized list is
-    # cached ALREADY HASH-PARTITIONED on the join key (the SQL cache
-    # preserves the ``repartition`` partitioning), so each round
-    # shuffles only the node-sized labels.  This is OFF by default:
-    # below ~10⁶ edges the one-time cache build + per-round
-    # InMemoryTableScan costs MORE than the tiny exchanges it removes
-    # (micro-measured at sf0.1: 1.5 s → 2.7 s warm), while the 30M-key
-    # ER ladder leg runs with it on — see OPTIMIZATION_r12.md.
-    prepartition = (
-        edges.sparkSession.conf.get(
-            "spark.pos.cc.prepartitionEdges", "false"
-        ).lower()
-        == "true"
-    )
     sym = oriented.unionByName(
         oriented.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    if prepartition:
-        sym = sym.repartition("a").persist(StorageLevel.MEMORY_AND_DISK)
     labels = (
         sym.select(F.col("a").alias("id"))
         .distinct()
@@ -978,68 +932,12 @@ def connected_components(
             )
         )
 
-    # r12 (guide §1 profile: the loop's wall here is ~fixed cost PER
-    # ACTION — py4j plan construction + QueryExecution + AQE stage
-    # scheduling — not executor work): after the first two rounds,
-    # rounds are probed in PAIRS, so one collect drives two rounds.
-    # Correctness is unchanged because min-label propagation is
-    # monotone and idempotent at the fixpoint: if round b+1 already
-    # converged (sum_{b+1} == sum_b), round b+2 recomputes the
-    # identical labels, so returning the batch's last iterate returns
-    # the fixpoint either way.  The first two probes stay single-round
-    # because typical dedup graphs (star-shaped duplicate clusters)
-    # converge by round 2–3 — batching there only buys the wasted
-    # confirm round (A/B-measured: dedup_decisions 3.0 → 3.2 s with
-    # unconditional pairs); long-diameter graphs (entity-resolution
-    # chains, 10+ rounds) get the halved driver round-trips where they
-    # matter (fuzzy_part_entities_final 5.3 → 4.4 s).  Cost: at most
-    # ONE wasted round past the fixpoint, only on loops that run ≥ 3
-    # rounds.
-    prev_sum: int | None = None
-    converged = False
-    rounds = 0
-    while rounds < max_iters and not converged:
-        batch = 1 if rounds < 2 else min(2, max_iters - rounds)
-        iterates = []
-        lbl = labels
-        for _ in range(batch):
-            lbl = _one_round(lbl)
-            iterates.append(lbl)
-        rounds += batch
-        # each per-round aggregate carries an explicit round-index
-        # literal (ADVICE r12): reading sums by index instead of row
-        # order removes the implicit dependency on Union preserving
-        # child partition order
-        probe = iterates[0].agg(F.sum("component_id").alias("s")).select(
-            F.lit(0).alias("j"), "s"
-        )
-        for jdx, it in enumerate(iterates[1:], 1):
-            probe = probe.unionByName(
-                it.agg(F.sum("component_id").alias("s")).select(
-                    F.lit(jdx).alias("j"), "s"
-                )
-            )
-        # ONE job: materializes every checkpoint in the batch and
-        # returns the per-round label sums (keyed by round index)
-        by_j = {r["j"]: r["s"] for r in probe.collect()}
-        sums = [by_j[j] for j in range(len(iterates))]
-        # all materialized — the previous iterates' blocks can never be
-        # read again; free them instead of leaking one node-sized frame
-        # per round
-        _release_checkpoint(labels)
-        for it in iterates[:-1]:
-            _release_checkpoint(it)
-        labels = iterates[-1]
-        for s in sums:
-            if s == prev_sum:
-                converged = True
-                break
-            prev_sum = s
+    labels, _, converged = converge(
+        labels, _one_round, F.sum("component_id"), operator.eq, max_iters
+    )
     # the returned frame reads only its own checkpoint blocks — the
     # edge list is done serving the loop either way
-    _release_checkpoint(oriented)
-    if prepartition:
-        sym.unpersist(False)
+    release_checkpoint(oriented)
     if not converged:
         # Unconverged labels would silently diverge from the full-
         # reachability oracle (a long duplicate chain exceeds the round
@@ -1088,7 +986,7 @@ def incremental_batch_decisions(
     operator's job (the full pipeline handles those when the batch is
     folded into the corpus); decisions here are batch-vs-corpus only.
     """
-    docs = _ensure_parallelism(docs)
+    docs = ensure_parallelism(docs)
     is_batch = (F.col("doc_id") % batch_mod) == batch_rem
     return incremental_decisions(
         docs.where(~is_batch),
@@ -1116,8 +1014,8 @@ def incremental_decisions(
     (dup_exact / dup_near / new + corpus canonical)."""
     from pos_pipeline_core_etl_spark.operators.text import fingerprint
 
-    corpus = _ensure_parallelism(corpus)
-    batch = _ensure_parallelism(batch)
+    corpus = ensure_parallelism(corpus)
+    batch = ensure_parallelism(batch)
     bfp = fingerprint(batch, text_col).select("doc_id", "fp")
     c_canon = (
         fingerprint(corpus, text_col)
@@ -1264,7 +1162,7 @@ def substring_duplicate_spans(
     No doc × doc leg anywhere, so the plan survives 100 TB unchanged;
     `stride` is the cost knob (windows per token = 1/stride).
     """
-    base = _ensure_parallelism(docs.select(id_col, text_col), key=id_col)
+    base = ensure_parallelism(docs.select(id_col, text_col), key=id_col)
     wins = base.select(
         id_col,
         F.explode(window_grams(F.col(text_col), window, stride)).alias("gram"),
@@ -1324,7 +1222,7 @@ def remove_duplicate_spans(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<pos:int,wid:long>>"))
-    base = _ensure_parallelism(docs.select(id_col, text_col), key=id_col)
+    base = ensure_parallelism(docs.select(id_col, text_col), key=id_col)
     wins = base.select(id_col, F.explode(grams).alias("w")).select(
         id_col, F.col("w.pos").alias("pos"), F.col("w.wid").alias("wid")
     )
@@ -1376,7 +1274,7 @@ def remove_benchmark_spans(
     benchmark-sized and BROADCAST; the corpus leg is one explode +
     one broadcast semi join + a map-side token filter. Never
     corpus × corpus, no corpus-sized shuffle at all."""
-    corpus = _ensure_parallelism(
+    corpus = ensure_parallelism(
         docs.where(F.col(id_col) >= benchmark_max_id).select(id_col, text_col),
         key=id_col,
     )
@@ -1503,7 +1401,7 @@ def winnow_stats(
     t = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
     n_kgrams = F.greatest(F.size(t) - k + 1, F.lit(0))
     fps = winnow_fingerprints_col(F.col(text_col), k, w)
-    return _ensure_parallelism(docs.select("doc_id", text_col)).select(
+    return ensure_parallelism(docs.select("doc_id", text_col)).select(
         "doc_id",
         n_kgrams.cast("long").alias("n_kgrams"),
         F.size(fps).cast("long").alias("n_fingerprints"),
@@ -1532,7 +1430,7 @@ def winnow_shared_pairs(
     above the cap (boilerplate fingerprints shared by thousands of
     docs — headers, license text) are EXCLUDED, which is also standard
     winnowing practice (drop too-common fingerprints as noise)."""
-    fps = _ensure_parallelism(docs.select("doc_id", text_col)).select(
+    fps = ensure_parallelism(docs.select("doc_id", text_col)).select(
         "doc_id", F.explode(winnow_fingerprints_col(F.col(text_col), k, w)).alias("fp")
     )
     keep = F.size("ids") > 1

@@ -97,7 +97,7 @@ def fuzzy_key_pairs(
             "neighborhoods explode combinatorially; chain through a "
             "d<=2 pass or use the MinHash family instead)"
         )
-    # r12 note (measured): NO blanket ``_ensure_parallelism`` here —
+    # r12 note (measured): NO blanket ``ensure_parallelism`` here —
     # it wins only when ``df`` is a raw single-file scan (the explode
     # otherwise runs on one task; callers like fuzzy_customer_pairs
     # apply it at the query layer), but on COMPOSED inputs (the part
@@ -351,7 +351,7 @@ def phonetic_pairs(
     in-bucket candidates only; no explode at all (the cheapest blocking
     of the three families — its recall profile, not its cost, is the
     trade, and fuzzy_family_recall_compare measures it).  No
-    ``_ensure_parallelism`` guard here, deliberately (r12, measured):
+    ``ensure_parallelism`` guard here, deliberately (r12, measured):
     with zero explode the map side is trivial, and the repartition the
     guard inserts costs more than the parallelism it buys."""
     v = df.select(

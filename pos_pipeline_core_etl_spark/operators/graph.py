@@ -26,8 +26,15 @@ edge list annotated with out-degrees once, lineage cut per iteration.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pos_pipeline_core_etl_spark.operators.common import (
+    converge,
+    release_checkpoint,
+)
 
 PAGERANK_SCALE = 10**9
 PAGERANK_DAMPING_PCT = 85  # d = 0.85 as an exact rational
@@ -326,66 +333,24 @@ def pagerank_converged(
             F.lit(0).cast("long").alias("rank_q"),
             F.lit(0).cast("long").alias("stop_iter"),
         )
-    from pos_pipeline_core_etl_spark.operators.dedup import _release_checkpoint
-
     ranks = nodes.withColumn("rank_q", F.lit(scale // n).cast("long"))
-    prev_ckpt: DataFrame | None = None
-    stop = max_iters
-    # r12 (guide §1 profile: 65 jobs, 0.57 executor-seconds — the loop's
-    # wall is per-ACTION driver overhead, not executor work): after the
-    # first two rounds, iterates are probed in PAIRS — one collect
-    # returns both rounds' L1 deltas (each iterate carries its own
-    # prev_q, so the probe is still join-free).  stop_iter stays
-    # bit-exact: the batch's per-round deltas are the same integers the
-    # one-probe-per-round loop computed, the first delta <= tol_q wins,
-    # and the RETURNED ranks are that round's iterate (both batch
-    # iterates are checkpointed; the loser is released).  Cost: at most
-    # one wasted round, only when the walk stops on the first round of
-    # a pair — against half the driver round-trips on the long tail of
-    # a converging walk.
-    delta_agg = lambda df: df.agg(  # noqa: E731
-        F.sum(F.abs(F.col("rank_q") - F.col("prev_q"))).alias("d")
+    # each iterate carries its own prev_q, so the probe is join-free;
+    # batching and checkpoint release: see converge
+    final, stop, _ = converge(
+        ranks,
+        lambda it: _pagerank_step_delta(
+            annotated, it.select("node", "rank_q"), n, damping_pct, scale
+        ),
+        F.sum(F.abs(F.col("rank_q") - F.col("prev_q"))),
+        lambda _prev, d: d <= tol_q,
+        max_iters,
     )
-    i = 0
-    while i < max_iters:
-        batch = 1 if i < 2 else min(2, max_iters - i)
-        iterates = []
-        cur = ranks
-        for _ in range(batch):
-            nxt = _pagerank_step_delta(annotated, cur, n, damping_pct, scale)
-            iterates.append(nxt)
-            cur = nxt.select("node", "rank_q")
-        # explicit round-index literal per aggregate (ADVICE r12): the
-        # deltas are read by index, not by Union child order
-        probe = delta_agg(iterates[0]).select(F.lit(0).alias("j"), "d")
-        for jdx, it in enumerate(iterates[1:], 1):
-            probe = probe.unionByName(
-                delta_agg(it).select(F.lit(jdx).alias("j"), "d")
-            )
-        by_j = {r["j"]: r["d"] for r in probe.collect()}
-        deltas = [by_j[j] for j in range(len(iterates))]
-        # every iterate in the batch is now materialized — the previous
-        # round's blocks can never be read again (connected_components
-        # discipline — don't leak one node-sized frame per round)
-        if prev_ckpt is not None:
-            _release_checkpoint(prev_ckpt)
-        hit = next(
-            (j for j, d in enumerate(deltas) if d <= tol_q), None
-        )
-        if hit is not None:
-            stop = i + hit + 1
-            keep = iterates[hit]
-            for it in iterates:
-                if it is not keep:
-                    _release_checkpoint(it)
-            ranks = keep.select("node", "rank_q")
-            return ranks.withColumn("stop_iter", F.lit(stop).cast("long"))
-        for it in iterates[:-1]:
-            _release_checkpoint(it)
-        prev_ckpt = iterates[-1]
-        ranks = prev_ckpt.select("node", "rank_q")
-        i += batch
-    return ranks.withColumn("stop_iter", F.lit(stop).cast("long"))
+    # the returned iterate reads only its own checkpoint blocks
+    release_checkpoint(annotated)
+    release_checkpoint(nodes)
+    return final.select(
+        "node", "rank_q", F.lit(stop).cast("long").alias("stop_iter")
+    )
 
 
 def pagerank_personalized(
@@ -467,12 +432,13 @@ def kcore_nodes(
     Determinism contract: everything is integer set algebra, so both
     engines walk the same peel sequence.  The live set shrinks
     monotonically, so "stable" == "this round's survivor count equals
-    last round's" — ONE bounded scalar per round (the connected-
-    components loop discipline).  The cap makes the output exact-equal
-    to an oracle unrolled to the same cap REGARDLESS of where the
-    fixpoint lands: if peeling stabilizes at round s <= cap the later
-    unrolled rounds are no-ops; if it hasn't stabilized by the cap both
-    engines agree on the round-cap set (stop_round then reads cap).
+    last round's" — ONE bounded scalar per round, probed by
+    :func:`~operators.common.converge`.  The cap makes the output
+    exact-equal to an oracle unrolled to the same cap REGARDLESS of
+    where the fixpoint lands: if peeling stabilizes at round s <= cap
+    the later unrolled rounds are no-ops; if it hasn't stabilized by
+    the cap both engines agree on the round-cap set (stop_round then
+    reads cap).
     core_deg is the node's degree within the final subgraph.
 
     Scale shape: each round is the symmetric edge list semi-joined to
@@ -490,29 +456,24 @@ def kcore_nodes(
         )
         .localCheckpoint(eager=True)
     )
-    live = sym.select(F.col("src").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-    n_prev = live.count()
-    stop = max_rounds
-    deg = None
-    for i in range(1, max_rounds + 1):
-        kept = (
-            sym.join(live.withColumnRenamed("node", "src"), "src")
-            .join(live.withColumnRenamed("node", "dst"), "dst")
-        )
-        deg = (
-            kept.groupBy("src")
+    live = sym.select("src").distinct().localCheckpoint(eager=True)
+
+    def _peel(cur: DataFrame) -> DataFrame:
+        live = cur.select("src")
+        return (
+            sym.join(live, "src")
+            .join(live.withColumnRenamed("src", "dst"), "dst")
+            .groupBy("src")
             .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
             .where(F.col("core_deg") >= k)
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        n_now = deg.count()
-        live = deg.select(F.col("src").alias("node"))
-        if n_now == n_prev:
-            stop = i
-            break
-        n_prev = n_now
+
+    deg, stop, _ = converge(
+        live, _peel, F.count(F.lit(1)), operator.eq, max_rounds,
+        prev=live.count(),
+    )
+    release_checkpoint(sym)  # the returned iterate reads only its own blocks
     return deg.select(
         F.col("src").alias("node"),
         "core_deg",

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pos_pipeline_core_etl_spark.operators.common import ensure_parallelism
+
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, first_byte long, fake_width long, "
     "fake_height long, decoder string"
@@ -338,9 +340,7 @@ def documents_as_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     mapInPandas decode is the single most CPU-bound stage a multimodal
     pipeline has (real codecs, not the stub), and a one-file corpus must
     not feed it as ONE Arrow task."""
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(docs)
+    docs = ensure_parallelism(docs)
     return docs.select("doc_id", F.encode(F.col(text_col), "UTF-8").alias("payload"))
 
 

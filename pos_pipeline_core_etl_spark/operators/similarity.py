@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pos_pipeline_core_etl_spark.functions.rounding import hround
+from pos_pipeline_core_etl_spark.operators.common import ensure_parallelism
 
 N_PLANES = 8
 PLANE_MIX = 2654435761  # Knuth multiplicative constant
@@ -88,11 +89,9 @@ def cosine_topk(
     """Top-k cosine neighbors for each query vector (vec_id < n_queries)."""
     from pyspark.sql import Window
 
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
     # single-file corpora otherwise run the per-pair interpreted HOF dot
     # products on ONE task (no-op on multi-file inputs at real scale)
-    embeddings = _ensure_parallelism(embeddings, id_col)
+    embeddings = ensure_parallelism(embeddings, id_col)
 
     corpus = embeddings.select(
         F.col(id_col).alias("cand_id"), _as_double(F.col(vec_col)).alias("cvec")
@@ -140,9 +139,7 @@ def l2_topk(
     path."""
     from pyspark.sql import Window
 
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    embeddings = _ensure_parallelism(embeddings, id_col)
+    embeddings = ensure_parallelism(embeddings, id_col)
     corpus = embeddings.select(
         F.col(id_col).alias("cand_id"), _as_double(F.col(vec_col)).alias("cvec")
     )
@@ -225,9 +222,7 @@ def lsh_bucket(vec: Column | str, dim: int = 64, n_planes: int = N_PLANES) -> Co
 
 
 def lsh_buckets(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    embeddings = _ensure_parallelism(embeddings, id_col)
+    embeddings = ensure_parallelism(embeddings, id_col)
     return embeddings.select(
         F.col(id_col).alias("vec_id"),
         lsh_bucket(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("bucket"),
@@ -424,9 +419,7 @@ def ivf_fixed_search_topk(
     """
     from pyspark.sql import Window
 
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    base = _ensure_parallelism(embeddings, id_col).select(
+    base = ensure_parallelism(embeddings, id_col).select(
         F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
     )
     d2_structs = [
@@ -491,10 +484,8 @@ def lsh_bucket_topk(
     cross product — the shuffle key is the bucket id)."""
     from pyspark.sql import Window
 
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
     base = (
-        _ensure_parallelism(embeddings, id_col).select(
+        ensure_parallelism(embeddings, id_col).select(
             F.col(id_col).alias("vid"),
             _as_double(F.col(vec_col)).alias("vec"),
         )
@@ -585,10 +576,8 @@ def embedding_neardup_pairs(
     ``max_bucket_size`` are excluded from the self-join (degenerate-
     corpus guard — see :func:`embedding_bucket_overflow`); ``None``
     disables the cap."""
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
     base = (
-        _ensure_parallelism(embeddings, id_col).select(
+        ensure_parallelism(embeddings, id_col).select(
             F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("vec")
         )
         .withColumn("bucket", lsh_bucket("vec"))
@@ -814,11 +803,9 @@ def semdedup(
     boundary is a table write; same topology.  A single-file corpus
     otherwise runs the per-pair interpreted cosines on ONE task
     (measured 5.6 executor-seconds single-threaded at sf0.1) —
-    ``_ensure_parallelism`` spreads it across cores, a no-op on
+    ``ensure_parallelism`` spreads it across cores, a no-op on
     multi-file inputs at real scale."""
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    embeddings = _ensure_parallelism(embeddings, id_col)
+    embeddings = ensure_parallelism(embeddings, id_col)
     assigned = _kmeans_assignments(
         embeddings, k, iters, id_col, vec_col, with_vec=True
     )
@@ -1436,9 +1423,7 @@ def ivfpq_search_topk(
     scoring joins a broadcast (query × probed-list × sub × code)
     distance table and folds per-candidate sums in subspace order —
     bit-exact cross-engine, same discipline as :func:`pq_adc_topk`."""
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    base = _ensure_parallelism(embeddings, id_col).select(
+    base = ensure_parallelism(embeddings, id_col).select(
         F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
     )
     d2_structs = [
@@ -1599,9 +1584,7 @@ def ivfpq_build_index(
     the first action pays training exactly once.  ``eager=True``
     materializes all four index frames immediately — the serving shape,
     and what lets the scale ladder time train vs query honestly."""
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    base = _ensure_parallelism(embeddings, id_col)
+    base = ensure_parallelism(embeddings, id_col)
     assigned, cents = _kmeans_assignments(
         base,
         k=n_clusters,

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pos_pipeline_core_etl_spark.functions.rounding import hround
+from pos_pipeline_core_etl_spark.operators.common import ensure_parallelism
 
 TOKEN_SPLIT_RE = r"\s+"
 # word / number / single punctuation — a BPE-ish pre-tokenizer
@@ -443,15 +444,11 @@ def decontaminate_bloom(
     filter has no false negatives — every benchmark gram's bits are in
     the map); the unit test pins that invariant and the fp rate.
     """
-    from pos_pipeline_core_etl_spark.operators.dedup import (
-        _ensure_parallelism,
-        shingle_id,
-        shingles_col,
-    )
+    from pos_pipeline_core_etl_spark.operators.dedup import shingle_id, shingles_col
 
     # the corpus leg is CPU-bound per row (shingle explode + md5 per
     # gram); a single-file source must not run it on one task
-    docs = _ensure_parallelism(docs)
+    docs = ensure_parallelism(docs)
 
     bench_grams = (
         docs.where(F.col("doc_id") < benchmark_max_id)
@@ -542,13 +539,12 @@ def decontaminate_fuzzy(
     from pyspark.sql import Window
 
     from pos_pipeline_core_etl_spark.operators.dedup import (
-        _ensure_parallelism,
         lsh_band_buckets,
         minhash_signatures,
         shingles_col,
     )
 
-    docs = _ensure_parallelism(docs)
+    docs = ensure_parallelism(docs)
     # two consumers (benchmark + corpus band legs): without a checkpoint
     # the shingle explode + 16 min-aggs run twice (multi-consumer rule)
     sigs = minhash_signatures(docs, text_col).localCheckpoint(eager=False)
@@ -685,11 +681,9 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text") -> DataFrame:
     costs less than materializing the exploded rows (profile:
     text_bigram_logprob 1.6 s recompute vs 4.9 s checkpointed).  The
     r12 win here is parallelism: a single-file corpus otherwise runs
-    the tokenize+explode on ONE task (see ``_ensure_parallelism``).
+    the tokenize+explode on ONE task (see ``ensure_parallelism``).
     """
-    from pos_pipeline_core_etl_spark.operators.dedup import _ensure_parallelism
-
-    docs = _ensure_parallelism(docs)
+    docs = ensure_parallelism(docs)
     t = tokens_col(F.lower(F.trim(F.col(text_col))))
     pairs = docs.select(
         "doc_id",

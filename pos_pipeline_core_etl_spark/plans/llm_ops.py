@@ -20,6 +20,7 @@ from pos_pipeline_core_etl_spark.operators import (
     similarity,
     text,
 )
+from pos_pipeline_core_etl_spark.operators.common import ensure_parallelism
 from pos_pipeline_core_etl_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -608,7 +609,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     P(candidate) ≈ 0.99 — the audit pins the LSH miss pattern exactly,
     cross-engine."""
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    sh = dedup._ensure_parallelism(docs).select(
+    sh = ensure_parallelism(docs).select(
         "doc_id", dedup.shingles_col(F.col("text")).alias("sh")
     )
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -1013,7 +1014,7 @@ def dedup_simhash_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate set (the measured degenerate mode where the unstaged
     32-bit form dies at 100×). Cost: one fingerprint shuffle + the banded path's
     keyed aggs — never doc × doc."""
-    docs = dedup._ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     survivors = dedup.exact_survivors(docs)
     pairs = dedup.simhash_banded_pairs(
         survivors, max_hamming=3, bits=STAGED_SIMHASH_BITS
@@ -2011,7 +2012,7 @@ def dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped_exact → the fingerprint group's min id; dropped_near → the
     near-dup component's min id; kept → itself.
     """
-    docs = dedup._ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     fp = text.fingerprint(docs).select("doc_id", "fp")
     canon = fp.groupBy("fp").agg(F.min("doc_id").alias("exact_keep"))
     # labeled feeds both the survivor leg and the final decision join —
@@ -3197,7 +3198,7 @@ def _prep_decisions_for(raw_docs: DataFrame) -> DataFrame:
     partition only, with the benchmark held out of the dedup universe
     (production semantics: you never dedupe against your eval set, you
     decontaminate against it)."""
-    docs = dedup._ensure_parallelism(raw_docs)
+    docs = ensure_parallelism(raw_docs)
     sig = text.prep_signals(docs)
     pre_decision = (
         F.when(
@@ -6281,7 +6282,7 @@ def dedup_containment_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     unstaged 32-bit SimHash — PERFORMANCE.md round-6 ladder); over
     exact survivors the index stays corpus-size-invariant. Same
     staging discipline as dedup_simhash_staged / dedup_decisions."""
-    docs = dedup._ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     survivors = dedup.exact_survivors(docs)
     return dedup.containment_pairs(survivors)
 
@@ -6430,7 +6431,7 @@ def dedup_sparse_cosine_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured degenerate family as every unstaged near-dup form; see
     PERFORMANCE.md). Same staging discipline as dedup_simhash_staged /
     dedup_containment_staged."""
-    docs = dedup._ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     survivors = dedup.exact_survivors(docs)
     return dedup.sparse_cosine_pairs(survivors)
 
@@ -6469,7 +6470,7 @@ def dedup_contained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ties: higher doc_id) drops. One candidate pipeline + one keyed
     min-agg; at 100 TB this runs over exact-dedup survivors like every
     near-dup stage (the staged discipline)."""
-    docs = dedup._ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     sh = docs.select(
         "doc_id", F.size(dedup.shingles_col(F.col("text"))).alias("n_sh")
     ).localCheckpoint(eager=False)

@@ -538,91 +538,125 @@ class TestConnectedComponents:
         }
         assert set(got.values()) == {0}
 
-    def test_prepartition_edges_branch_matches_default(self, spark):
-        """ADVICE r12: the ``spark.pos.cc.prepartitionEdges=true`` branch
-        (hash-partitioned persisted edge cache, the huge-graph path) had
-        no test — assert it produces IDENTICAL labels to the default
-        path on a 400-node chain (long diameter, exercises many rounds
-        and the final unpersist)."""
-        from pos_pipeline_core_etl_spark.operators.dedup import connected_components
 
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(399)], "doc_a long, doc_b long"
-        )
-        want = {
-            r["id"]: r["component_id"]
-            for r in connected_components(chain).collect()
-        }
-        spark.conf.set("spark.pos.cc.prepartitionEdges", "true")
-        try:
-            got = {
-                r["id"]: r["component_id"]
-                for r in connected_components(chain).collect()
-            }
-        finally:
-            spark.conf.unset("spark.pos.cc.prepartitionEdges")
-        assert got == want
-        assert set(got.values()) == {0}
+class TestConverge:
+    """``operators.common.converge`` — the one fixed-point driver behind
+    connected components, tolerance-stopped PageRank and k-core."""
 
     @staticmethod
-    def _persisted_rdd_count(spark) -> int:
-        """Live persisted-RDD count from the JVM SparkContext — the
-        storage-info ground truth ``_release_checkpoint`` manipulates."""
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    def _counter(spark, done, max_rounds, cap=None, init=0, prev=None):
+        """Run ``converge`` over a one-row counter (v -> v + 1, clipped
+        at ``cap``); returns (final v, rounds, converged, steps run,
+        number of persisted RDDs left behind)."""
+        from pos_pipeline_core_etl_spark.operators.common import converge
 
+        jmap = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(jmap().keySet().toArray())
+        steps = []
+
+        def step(df):
+            steps.append(1)
+            nxt = F.col("v") + 1
+            if cap is not None:
+                nxt = F.least(nxt, F.lit(cap))
+            return df.select(nxt.alias("v")).localCheckpoint(eager=False)
+
+        it, rounds, converged = converge(
+            spark.createDataFrame([(init,)], "v long"),
+            step, F.max("v"), done, max_rounds, prev=prev,
+        )
+        v = it.first()["v"]
+        left = set(jmap().keySet().toArray()) - before
+        for rid in left:
+            jmap().get(rid).unpersist(False)
+        return v, rounds, converged, len(steps), len(left)
+
+    def test_stop_index(self, spark):
+        """Rounds run 1, 1, 2, 2, ...: the stop index and the returned
+        iterate are the unbatched loop's wherever the stop lands, and
+        only the returned iterate's checkpoint stays live."""
+        reach = lambda t: lambda _prev, m: m >= t  # noqa: E731
+        # first round of the pair (3, 4): round 4 is the one wasted round
+        assert self._counter(spark, reach(3), 10) == (3, 3, True, 4, 1)
+        # second round of the pair
+        assert self._counter(spark, reach(4), 10) == (4, 4, True, 4, 1)
+        # the cap binds (batches 1, 1, 2, 1): last iterate, not converged
+        assert self._counter(spark, reach(99), 5) == (5, 5, False, 5, 1)
+        assert self._counter(spark, reach(99), 1) == (1, 1, False, 1, 1)
+        assert self._counter(spark, reach(1), 1) == (1, 1, True, 1, 1)
+        # stability against the previous round's scalar, seeded by prev
+        stable = lambda prev, m: m == prev  # noqa: E731
+        assert self._counter(spark, stable, 10, cap=3) == (3, 4, True, 4, 1)
+        assert self._counter(
+            spark, stable, 10, cap=3, init=3, prev=3
+        ) == (3, 1, True, 1, 1)
+
+    @staticmethod
+    def _run_loop(spark, name):
+        from pos_pipeline_core_etl_spark.operators import dedup, graph
+
+        chain = [(i, i + 1) for i in range(300)]
+        if name == "connected_components":
+            edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
+            return dedup.connected_components(edges)
+        edges = spark.createDataFrame(chain[:24], "src long, dst long")
+        if name == "pagerank_converged":
+            # unreachable tolerance: every round up to the cap runs
+            return graph.pagerank_converged(edges, tol_q=-1, max_iters=10)
+        # a path has no 2-core: peels its two ends per round to the cap
+        return graph.kcore_nodes(edges, k=2)
+
+    @pytest.mark.parametrize(
+        "loop", ["connected_components", "pagerank_converged", "kcore_nodes"]
+    )
     def test_release_checkpoint_keeps_persisted_rdds_bounded(
-        self, spark, monkeypatch
+        self, spark, monkeypatch, loop
     ):
-        """Pin ``_release_checkpoint`` against silent regression
+        """Pin ``release_checkpoint`` against silent regression
         (VERDICT r11 #2): it reaches through private py4j accessors
         under a blanket ``except``, so a Spark API change would turn
         the per-round block release into a NO-OP with zero signal — and
         the r10 15M-key ER OOM class returns invisibly.  This test
-        makes that failure loud: a multi-round CC run must leave O(1)
-        persisted RDDs behind, and the SAME run with the release
-        stubbed to ``pass`` must leak ~one frame per halving round —
-        so the healthy bound genuinely discriminates (the test fails
-        if the stub arm stops leaking, i.e. if the bound went vacuous).
+        makes that failure loud: a multi-round loop must leave O(1)
+        persisted RDDs behind, and the SAME run with the release that
+        ``converge`` calls stubbed to ``pass`` must leak ~one frame per
+        round — so the healthy bound genuinely discriminates (the test
+        fails if the stub arm stops leaking, i.e. if the bound went
+        vacuous).
         """
-        from pos_pipeline_core_etl_spark.operators import dedup
-
-        chain = [(i, i + 1) for i in range(300)]
-        edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
+        from pos_pipeline_core_etl_spark.operators import common
 
         jmap = spark.sparkContext._jsc.getPersistentRDDs
-        base = self._persisted_rdd_count(spark)
-        labels = dedup.connected_components(edges)
-        labels.collect()
-        healthy = self._persisted_rdd_count(spark) - base
-        dedup._release_checkpoint(labels)  # drop the returned frame too
-        # O(1): the returned labels checkpoint (+ at most one in-flight
-        # frame) — NOT one per round.  A no-op release lands ≥ 6 here.
+
+        def leaked_by_run():
+            before = set(jmap().keySet().toArray())
+            self._run_loop(spark, loop).collect()
+            leaked = set(jmap().keySet().toArray()) - before
+            # free exactly what this run left (ids diffed, so foreign
+            # persisted RDDs are untouched)
+            live = jmap()
+            for rid in leaked:
+                rdd = live.get(rid)
+                if rdd is not None:
+                    rdd.unpersist(False)
+            return len(leaked)
+
+        healthy = leaked_by_run()
+        # O(1): the returned checkpoint (+ at most the loop's setup
+        # frames) — NOT one per round.  A no-op release lands ≥ 6 here.
         assert healthy <= 3, (
-            f"{healthy} persisted RDDs left behind — _release_checkpoint "
+            f"{healthy} persisted RDDs left behind — release_checkpoint "
             "is no longer freeing per-round checkpoint blocks"
         )
 
         # discrimination arm: stub the release and the leak must be
         # visible, proving the bound above can actually catch a no-op
-        monkeypatch.setattr(
-            dedup, "_release_checkpoint", lambda df: None
+        monkeypatch.setattr(common, "release_checkpoint", lambda df: None)
+        stubbed = leaked_by_run()
+        assert stubbed > 3, (
+            f"stubbed release leaked only {stubbed} RDDs — the healthy "
+            "bound no longer discriminates; tighten the fixture"
         )
-        before_ids = set(jmap().keySet().toArray())
-        leaked_labels = dedup.connected_components(edges)
-        leaked_labels.collect()
-        leaked_ids = set(jmap().keySet().toArray()) - before_ids
-        assert len(leaked_ids) > 3, (
-            f"stubbed release leaked only {len(leaked_ids)} RDDs — the "
-            "healthy bound no longer discriminates; tighten the fixture"
-        )
-        # clean up exactly what this arm leaked (ids diffed, so foreign
-        # persisted RDDs are untouched)
-        monkeypatch.undo()
-        live = jmap()
-        for rid in leaked_ids:
-            rdd = live.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
 
 
 class TestLshParameterization:

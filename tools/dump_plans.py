@@ -1,15 +1,33 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the bench headline
-queries at sf0.001 (plan shape is SF-independent; tiny SF keeps this
-fast). Run: python tools/dump_plans.py"""
+"""Dump physical plans of registry queries (plan shape is SF-independent,
+so the default tiny SF keeps this fast).
+
+    python tools/dump_plans.py
+        regenerate PLANS.md: the executed plans of the bench headline
+        queries.
+    python tools/dump_plans.py --tag before --out plans/r14 q1,q2,...
+        write <out>/<query>_<tag>.txt, the ``explain("formatted")`` plan
+        of each named query.
+    python tools/dump_plans.py --ref HEAD --tag before --out DIR q1,...
+        the same, built from the package at a git ref: the ref is
+        exported with ``git archive`` into a temporary directory and the
+        dump runs against that copy, so the working tree is never
+        touched.
+
+Expression ids, RDD ids, plan ids and file paths are masked, so two
+dumps of the same plan shape are byte-identical and ``diff -r`` shows
+only real plan changes.
+"""
+import argparse
+import io
 import os
 import re
+import subprocess
 import sys
+import tarfile
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pos_pipeline_core_etl_spark.session import get_spark  # noqa: E402
-from pos_pipeline_core_etl_spark import registry  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF = "/root/testdata/sf0.001"
 HEADLINE = (
@@ -63,10 +81,14 @@ HEADLINE = (
 )
 
 
-def main():
-    spark = get_spark(app_name="plandump")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.all_queries()
+def _mask(plan: str) -> str:
+    plan = re.sub(r"file:[^,\]\s]+", "<path>", plan)
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD", plan)
+    return re.sub(r"plan_id=\d+", "plan_id", plan)
+
+
+def write_plans_md(spark, queries, sf: str) -> None:
     out = [
         "# PLANS — executed physical plans of the headline queries",
         "",
@@ -79,19 +101,78 @@ def main():
         "",
     ]
     for name in HEADLINE:
-        df = qs[name](spark, SF)
+        df = queries[name](spark, sf)
         df.collect()  # count() would execute a derived plan; collect()
         # runs THIS df so the AQE final plan is what gets printed
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # trim location/path noise, keep operator structure
-        plan = re.sub(r"file:[^,\]\s]+", "<path>", plan)
-        plan = re.sub(r"#\d+L?", "", plan)
+        plan = _mask(df._jdf.queryExecution().executedPlan().toString())
         lines = [ln.rstrip() for ln in plan.splitlines() if ln.strip()]
         if len(lines) > 60:
             lines = lines[:60] + [f"... ({len(lines) - 60} more lines)"]
         out += [f"## {name}", "", "```", *lines, "```", ""]
-    open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w").write("\n".join(out))
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+        f.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def write_formatted(spark, queries, sf: str, names, tag: str, out: str) -> None:
+    os.makedirs(out, exist_ok=True)
+    for name in names:
+        df = queries[name](spark, sf)
+        txt = _mask(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        )
+        path = os.path.join(out, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(txt)
+        print(f"wrote {path} ({txt.count('Exchange')} Exchange refs)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="?", help="comma-separated query names")
+    ap.add_argument("--tag", default="after", help="file-name suffix")
+    ap.add_argument("--out", default="plans", help="output directory")
+    ap.add_argument("--ref", help="dump the package at this git ref")
+    ap.add_argument("--sf", default=SF, help="scale-factor directory")
+    ap.add_argument("--src", default=ROOT, help=argparse.SUPPRESS)
+    args = ap.parse_args()
+    if args.ref and not args.queries:
+        ap.error("--ref needs query names")
+
+    if args.ref:
+        tar = subprocess.run(
+            ["git", "-C", ROOT, "archive", "--format=tar", args.ref],
+            check=True, capture_output=True,
+        ).stdout
+        with tempfile.TemporaryDirectory() as src:
+            with tarfile.open(fileobj=io.BytesIO(tar)) as tf:
+                tf.extractall(src, filter="data")
+            # cwd and PYTHONPATH too, so Python workers import the
+            # ref's package, not the working tree's
+            sys.exit(subprocess.run(
+                [
+                    sys.executable, os.path.abspath(__file__), args.queries,
+                    "--tag", args.tag, "--out", os.path.abspath(args.out),
+                    "--sf", os.path.abspath(args.sf), "--src", src,
+                ],
+                cwd=src, env=dict(os.environ, PYTHONPATH=src),
+            ).returncode)
+
+    sys.path.insert(0, args.src)
+    from pos_pipeline_core_etl_spark import registry
+    from pos_pipeline_core_etl_spark.session import get_spark
+
+    spark = get_spark(app_name="dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = registry.all_queries()
+    if args.queries:
+        write_formatted(
+            spark, queries, args.sf, args.queries.split(","), args.tag, args.out
+        )
+    else:
+        write_plans_md(spark, queries, args.sf)
     spark.stop()
 
 
