@@ -14,23 +14,40 @@ qa/qa_payments.py``) re-expressed as a declarative DataFrame plan:
 - ``monthly_sales_table``     (:705-816)  monthly sales + elim-pct rollup
 - ``run_payments_qa``         (qa/api.py:29-171) leveled orchestration
 
-All checks are single-pass aggregations or window functions — no
+All checks are aggregations, joins or window functions — no
 ``iterrows`` loops (the reference iterates rows for reporting, e.g.
-``qa_payments.py:891``); at 100 TB each check is one shuffle at most.
+``qa_payments.py:891``).  Each public check is a lazy plan over the
+frame it is given, so run on its own it recomputes that frame.
+
+``run_payments_qa`` therefore does not run the checks one by one over
+the caller's (lazy) mart.  It materializes the mart once with an eager
+``localCheckpoint`` — bounded by the mart grain, branch × day, at any
+scale factor — and reads every count off that one copy in one action:
+the scalar checks (minimums, revenue consistency, zero-method days,
+nulls) share a single aggregate row, onto which the one-row counts of
+duplicates, missing days and z-score anomalies are cross-joined, so
+adaptive execution runs their independent shuffles side by side.  The
+checkpoint is released before it returns; the ``details`` frames it
+hands back are lazy plans over the caller's mart, so they stay valid
+after the release.
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from operator import add
+from operator import add, or_
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pos_pipeline_core_etl_spark.functions.buckets import PAYMENT_BUCKETS
 from pos_pipeline_core_etl_spark.functions.rounding import hround
+from pos_pipeline_core_etl_spark.operators.common import release_checkpoint
 
 INGRESO_COLS = tuple(f"ingreso_{b}" for b in PAYMENT_BUCKETS)
+MONEY_COLS = (*INGRESO_COLS, "propinas")
+KEY_COLS = ("sucursal", "fecha")  # a null here is an ERROR, elsewhere a WARN
+VALUE_COLS = (*MONEY_COLS, "num_tickets")
 NEG_TOLERANCE = -1e-6  # qa_payments.py:535
 ZSCORE_WINDOW = 60  # qa_payments.py:333
 ZSCORE_THRESHOLD = 4.0
@@ -42,6 +59,30 @@ def ingreso_total_col():
     return reduce(add, [F.col(c) for c in INGRESO_COLS])
 
 
+def _count_if(cond):
+    return F.count(F.when(cond, F.lit(1)))
+
+
+def _non_negative_aggs() -> list:
+    return [F.min(F.col(c)).alias(f"min_{c}") for c in MONEY_COLS]
+
+
+def _consistency_aggs() -> list:
+    total = ingreso_total_col()
+    return [
+        _count_if((F.col("num_tickets") > 0) & (total <= 1e-6)).alias("tickets_no_revenue"),
+        _count_if((total > 1e-6) & (F.col("num_tickets") <= 0)).alias("revenue_no_tickets"),
+    ]
+
+
+def _zero_method():
+    return (
+        (F.col("num_tickets") > 0)
+        & (F.col("ingreso_credito") == 0)
+        & (F.col("ingreso_debito") == 0)
+    )
+
+
 def check_duplicates(mart: DataFrame) -> DataFrame:
     return (
         mart.groupBy("sucursal", "fecha")
@@ -51,32 +92,18 @@ def check_duplicates(mart: DataFrame) -> DataFrame:
 
 
 def check_nulls(mart: DataFrame, cols: tuple[str, ...] | None = None) -> DataFrame:
-    cols = cols or ("sucursal", "fecha", *INGRESO_COLS, "propinas", "num_tickets")
-    return mart.agg(
-        *[
-            F.count(F.when(F.col(c).isNull(), F.lit(1))).alias(f"nulls_{c}")
-            for c in cols
-        ]
-    )
+    cols = cols or (*KEY_COLS, *VALUE_COLS)
+    return mart.agg(*[_count_if(F.col(c).isNull()).alias(f"nulls_{c}") for c in cols])
 
 
 def check_non_negative(mart: DataFrame) -> DataFrame:
     """Minimum per money column; a min < −1e-6 is an ERROR in the reference."""
-    cols = (*INGRESO_COLS, "propinas")
-    return mart.agg(*[F.min(F.col(c)).alias(f"min_{c}") for c in cols])
+    return mart.agg(*_non_negative_aggs())
 
 
 def check_revenue_consistency(mart: DataFrame) -> DataFrame:
     """tickets>0 & revenue≈0, or revenue>0 & tickets≤0 → WARN counts."""
-    total = ingreso_total_col()
-    return mart.agg(
-        F.count(
-            F.when((F.col("num_tickets") > 0) & (total <= 1e-6), F.lit(1))
-        ).alias("tickets_no_revenue"),
-        F.count(
-            F.when((total > 1e-6) & (F.col("num_tickets") <= 0), F.lit(1))
-        ).alias("revenue_no_tickets"),
-    )
+    return mart.agg(*_consistency_aggs())
 
 
 def per_sucursal_ranges(mart: DataFrame) -> DataFrame:
@@ -155,11 +182,7 @@ def detect_zscore_anomalies(
 
 
 def detect_zero_method_flags(mart: DataFrame) -> DataFrame:
-    return mart.where(
-        (F.col("num_tickets") > 0)
-        & (F.col("ingreso_credito") == 0)
-        & (F.col("ingreso_debito") == 0)
-    ).select("sucursal", "fecha", "num_tickets", "ingreso_efectivo")
+    return mart.where(_zero_method()).select("sucursal", "fecha", "num_tickets", "ingreso_efectivo")
 
 
 def monthly_sales_table(mart: DataFrame) -> DataFrame:
@@ -174,37 +197,60 @@ def monthly_sales_table(mart: DataFrame) -> DataFrame:
 
 def run_payments_qa(mart: DataFrame) -> dict:
     """Leveled orchestration (qa/api.py:29-171): returns a summary dict
-    plus the detail frames. Errors = duplicates/negatives; warnings =
-    consistency/zero-method/missing-days/z-score."""
-    dup = check_duplicates(mart)
-    neg = check_non_negative(mart)
-    consistency = check_revenue_consistency(mart).collect()[0]
-    missing = detect_missing_days(mart)
-    anomalies = detect_zscore_anomalies(mart)
-    zero_method = detect_zero_method_flags(mart)
+    plus the detail frames.  Errors = duplicates, negative columns and
+    rows with a null key; warnings = consistency, zero-method days,
+    missing days, z-score anomalies and null value cells.
 
-    neg_row = neg.collect()[0]
-    n_dup = dup.count()
-    n_negative_cols = sum(
-        1 for v in neg_row.asDict().values() if v is not None and v < NEG_TOLERANCE
-    )
+    One eager ``localCheckpoint`` of ``mart`` and one action over it
+    serve every count (see the module docstring); the checkpoint is
+    freed before returning, and ``details`` are lazy plans over
+    ``mart`` itself."""
+    frame = mart.localCheckpoint(eager=True)
+    try:
+        scalars = frame.agg(
+            *_non_negative_aggs(),
+            *_consistency_aggs(),
+            _count_if(_zero_method()).alias("zero_method_days"),
+            _count_if(reduce(or_, [F.col(c).isNull() for c in KEY_COLS]))
+            .alias("null_keys"),
+            reduce(add, [_count_if(F.col(c).isNull()) for c in VALUE_COLS]).alias("null_values"),
+        )
+        counts = [
+            check(frame).agg(F.count(F.lit(1)).alias(name))
+            for name, check in (
+                ("duplicates", check_duplicates),
+                ("missing_days", detect_missing_days),
+                ("zscore_anomalies", detect_zscore_anomalies),
+            )
+        ]
+        row = reduce(DataFrame.crossJoin, counts, scalars).collect()[0]
+    finally:
+        release_checkpoint(frame)
+
     summary = {
-        "duplicates": n_dup,
-        "negative_columns": n_negative_cols,
-        "tickets_no_revenue": consistency["tickets_no_revenue"],
-        "revenue_no_tickets": consistency["revenue_no_tickets"],
-        "missing_days": missing.count(),
-        "zscore_anomalies": anomalies.count(),
-        "zero_method_days": zero_method.count(),
+        "duplicates": row["duplicates"],
+        "negative_columns": sum(
+            1 for c in MONEY_COLS
+            if row[f"min_{c}"] is not None and row[f"min_{c}"] < NEG_TOLERANCE
+        ),
+        "tickets_no_revenue": row["tickets_no_revenue"],
+        "revenue_no_tickets": row["revenue_no_tickets"],
+        "missing_days": row["missing_days"],
+        "zscore_anomalies": row["zscore_anomalies"],
+        "zero_method_days": row["zero_method_days"],
+        "null_keys": row["null_keys"],
+        "null_values": row["null_values"],
     }
-    summary["errors"] = summary["duplicates"] + summary["negative_columns"]
+    summary["errors"] = (
+        summary["duplicates"] + summary["negative_columns"] + summary["null_keys"]
+    )
     summary["status"] = "ERROR" if summary["errors"] else "OK"
     return {
         "summary": summary,
         "details": {
-            "duplicates": dup,
-            "missing_days": missing,
-            "zscore_anomalies": anomalies,
-            "zero_method_days": zero_method,
+            "duplicates": check_duplicates(mart),
+            "missing_days": detect_missing_days(mart),
+            "zscore_anomalies": detect_zscore_anomalies(mart),
+            "zero_method_days": detect_zero_method_flags(mart),
         },
     }

@@ -81,6 +81,10 @@ def run_stage(
     metadata ok/failed (reference stage-fn shape, etl/payments.py:42-117).
 
     mode: ``missing`` skips when metadata says ok; ``force`` rebuilds.
+
+    The written output is read back once: that frame's ``count()`` is
+    the metadata ``rows`` and the same frame is returned, so a rebuild
+    pays one partition discovery and one footer scan, not two.
     """
     if mode not in ("missing", "force"):
         raise ValueError(f"mode must be 'missing' or 'force', got {mode!r}")
@@ -94,9 +98,9 @@ def run_stage(
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out_dir)
-        rows = spark.read.parquet(out_dir).count()
-        write_metadata(base_dir, StageMetadata(stage, s, e, "ok", rows=rows))
+        out = spark.read.parquet(out_dir)
+        write_metadata(base_dir, StageMetadata(stage, s, e, "ok", rows=out.count()))
     except Exception:
         write_metadata(base_dir, StageMetadata(stage, s, e, "failed"))
         raise
-    return spark.read.parquet(out_dir)
+    return out

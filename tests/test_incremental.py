@@ -17,6 +17,7 @@ from pos_pipeline_core_etl_spark.operators.intervals import (
 from pos_pipeline_core_etl_spark.sources.metadata import (
     StageMetadata,
     read_metadata,
+    run_stage,
     should_skip_stage,
     write_metadata,
 )
@@ -83,6 +84,62 @@ class TestMetadata:
         base = str(tmp_path)
         write_metadata(base, StageMetadata("gold", "2024-01-01", "2024-01-31", "failed"))
         assert not should_skip_stage(base, "gold", "2024-01-01", "2024-01-31")
+
+
+class TestRunStage:
+    """``run_stage`` on a small in-memory build partitioned by date."""
+
+    START, END = D(2024, 1, 1), D(2024, 1, 2)
+
+    def _run(self, spark, base, build, mode="missing"):
+        return run_stage(spark, base, "silver", self.START, self.END, build,
+                         partition_by=("operating_date",), mode=mode)
+
+    def _meta(self, base):
+        return read_metadata(base, "silver", self.START.isoformat(), self.END.isoformat())
+
+    def test_rows_skip_and_force(self, spark, tmp_path):
+        base = str(tmp_path)
+        calls = []
+
+        def build(s):
+            calls.append(1)
+            return s.createDataFrame(
+                [(1, self.START), (2, self.START), (3, self.END)],
+                "id int, operating_date date",
+            )
+
+        df = self._run(spark, base, build)
+        meta = self._meta(base)
+        assert meta.status == "ok"
+        assert meta.rows == df.count() == 3
+        assert sorted(
+            d for d in os.listdir(os.path.join(base, "silver")) if d.startswith("operating_date=")
+        ) == ["operating_date=2024-01-01", "operating_date=2024-01-02"]
+        assert len(calls) == 1
+
+        skipped = self._run(spark, base, build)
+        assert len(calls) == 1
+        assert skipped.count() == 3
+
+        self._run(spark, base, build, mode="force")
+        assert len(calls) == 2
+        assert self._meta(base).rows == 3
+
+    def test_failed_build_records_failure_and_reraises(self, spark, tmp_path):
+        base = str(tmp_path)
+
+        def build(s):
+            raise RuntimeError("build failed")
+
+        with pytest.raises(RuntimeError, match="build failed"):
+            self._run(spark, base, build)
+        assert self._meta(base).status == "failed"
+        assert not should_skip_stage(base, "silver", "2024-01-01", "2024-01-02")
+
+    def test_bad_mode(self, spark, tmp_path):
+        with pytest.raises(ValueError):
+            self._run(spark, str(tmp_path), lambda s: None, mode="bogus")
 
 
 class TestApiFacade:
