@@ -21,6 +21,8 @@ from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pos_pipeline_core_etl_spark.sources.writers import write_partitioned
+
 STAGE_VERSION = "1"
 
 
@@ -80,7 +82,9 @@ def run_stage(
     """Idempotent stage executor: skip-check → build → parquet write →
     metadata ok/failed (reference stage-fn shape, etl/payments.py:42-117).
 
-    mode: ``missing`` skips when metadata says ok; ``force`` rebuilds.
+    mode: ``missing`` skips when metadata says ok and the output
+    directory still exists (an ok record whose output was deleted is
+    stale, so the stage rebuilds); ``force`` rebuilds.
 
     The written output is read back once: that frame's ``count()`` is
     the metadata ``rows`` and the same frame is returned, so a rebuild
@@ -90,14 +94,10 @@ def run_stage(
         raise ValueError(f"mode must be 'missing' or 'force', got {mode!r}")
     s, e = start.isoformat(), end.isoformat()
     out_dir = os.path.join(base_dir, stage)
-    if mode == "missing" and should_skip_stage(base_dir, stage, s, e):
+    if mode == "missing" and should_skip_stage(base_dir, stage, s, e) and os.path.isdir(out_dir):
         return spark.read.parquet(out_dir)
     try:
-        df = build(spark)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out_dir)
+        write_partitioned(build(spark), out_dir, partition_by=partition_by)
         out = spark.read.parquet(out_dir)
         write_metadata(base_dir, StageMetadata(stage, s, e, "ok", rows=out.count()))
     except Exception:

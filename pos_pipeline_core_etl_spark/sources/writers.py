@@ -3,9 +3,9 @@
 The medallion layers store Parquet partitioned by ``operating_date``
 (and optionally ``sucursal``) so downstream reads get partition pruning
 for free (SURVEY §4). The reference's utf-8-sig CSVs
-(``payments_cleaner.py:717-729``) remain available as an EXPORT format:
-distributed ``df.write.csv`` for fact-sized data, or a driver-side BOM
-file for small marts (byte-compatible with Excel expectations).
+(``payments_cleaner.py:717-729``) remain available as an EXPORT format
+for small marts: a driver-side BOM file, byte-compatible with Excel
+expectations.
 """
 
 from __future__ import annotations
@@ -27,20 +27,11 @@ def write_partitioned(
     writer.parquet(path)
 
 
-def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Distributed CSV export (header, per-partition files).
-
-    ``single_file`` coalesces to one partition — only for mart-sized
-    output (the reference's per-mart CSVs); fact-sized data keeps its
-    partitioning.
-    """
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
-
-
 def export_csv_bom(df: DataFrame, path: str) -> str:
-    """Driver-side utf-8-sig CSV (Excel BOM) for SMALL marts only —
-    collects to pandas, so guarded against fact-sized frames upstream."""
+    """Driver-side utf-8-sig CSV (Excel BOM) for SMALL marts only.
+
+    The whole frame is collected to pandas on the driver and nothing
+    checks its size: callers pass mart-sized frames."""
     pdf = df.toPandas()
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     pdf.to_csv(path, index=False, encoding="utf-8-sig")

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
 import pytest
 
@@ -125,6 +126,21 @@ class TestRunStage:
         self._run(spark, base, build, mode="force")
         assert len(calls) == 2
         assert self._meta(base).rows == 3
+
+    def test_ok_record_without_output_rebuilds(self, spark, tmp_path):
+        base = str(tmp_path)
+        calls = []
+
+        def build(s):
+            calls.append(1)
+            return s.createDataFrame([(1, self.START)], "id int, operating_date date")
+
+        self._run(spark, base, build)
+        shutil.rmtree(os.path.join(base, "silver"))
+        assert self._meta(base).status == "ok"
+        assert self._run(spark, base, build).count() == 1
+        assert len(calls) == 2
+        assert self._meta(base).rows == 1
 
     def test_failed_build_records_failure_and_reraises(self, spark, tmp_path):
         base = str(tmp_path)
