@@ -8,18 +8,111 @@ sessionization. The batch twins of both queries live in
 ``plans.streaming_queries`` and are oracle-checked; the streaming
 versions are asserted equal to the batch results in tests (file source
 + ``availableNow`` drains the table deterministically).
+
+Drain idiom: every runner hands its stream to :func:`_drain`, which
+runs ONE ``availableNow``-triggered query to completion — into a
+memory table or through a ``foreachBatch`` body — and returns the
+terminated query, so its ``recentProgress`` (input rows and the
+per-batch ``durationMs`` breakdown) stays readable after the drain.
+The sketch runners read their source through :func:`_chunked_stream`
+(``maxFilesPerTrigger=1``), so a multi-file backlog drains as several
+micro-batches and the merge leg of each maintainer really runs.
+
+Partition-state contract shared by every ``foreachBatch`` maintainer:
+
+- state and output live in ``batch_id=N`` directories, one per
+  micro-batch, written by :func:`write_batch_idempotent`;
+- batch N reads only STRICTLY earlier ids (:func:`_prior_partitions`
+  for the append-only indexes, ``_latest_partition(d, before=N)`` for
+  the constant-size sketch state), never its own id or a later one;
+- the final state is the highest id (``_latest_partition(d)``);
+- a replayed batch recomputes from the same earlier ids and overwrites
+  its own id, so at-least-once delivery converges to exactly-once.
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from pos_pipeline_core_etl_spark.functions.rounding import hround
 
 WINDOW = "5 minutes"
 WATERMARK = "10 minutes"
 SESSION_GAP = "30 minutes"
+
+
+def _drain(
+    stream: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None = None,
+    mode: str = "append",
+) -> StreamingQuery:
+    """Run one ``availableNow`` drain of ``stream`` to completion and
+    return the terminated query. ``sink`` is a memory-table name or a
+    ``foreachBatch`` body ``(batch_df, batch_id) -> None``."""
+    writer = stream.writeStream.outputMode(mode)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("memory").queryName(sink)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
+
+
+def _latest_partition(base_dir: str, before: int | None = None) -> str | None:
+    """Path of the numerically highest ``batch_id=N`` directory under
+    ``base_dir`` (only ``N < before`` when given), or None if there is
+    none."""
+    ids = [
+        int(d.rsplit("=", 1)[1])
+        for d in (os.listdir(base_dir) if os.path.isdir(base_dir) else [])
+        if d.startswith("batch_id=")
+    ]
+    ids = [n for n in ids if before is None or n < before]
+    return os.path.join(base_dir, f"batch_id={max(ids)}") if ids else None
+
+
+def _prior_partitions(
+    spark: SparkSession, base_dir: str, batch_id: int
+) -> DataFrame | None:
+    """Every partition of an append-only index with id < ``batch_id``,
+    read as one frame (with its ``batch_id`` column), or None when no
+    earlier batch wrote one. The partition filter prunes this batch's
+    own directory (a failed attempt's leftovers) and any later one."""
+    if _latest_partition(base_dir, before=batch_id) is None:
+        return None
+    return spark.read.parquet(base_dir).where(F.col("batch_id") < batch_id)
+
+
+def _chunked_stream(spark: SparkSession, schema: str, stream_dir: str) -> DataFrame:
+    """Parquet stream that drains one file per micro-batch.
+    ``availableNow`` honours the cap and splits the backlog, so a sketch
+    maintainer demonstrably runs INCREMENTALLY — without it the whole
+    backlog collapses into a single batch and the merge leg never
+    executes."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
+    )
+
+
+def _final_state(spark: SparkSession, base_dir: str, empty_schema: str) -> DataFrame:
+    """The highest-id state partition, or an empty frame of
+    ``empty_schema`` when the drain wrote none (empty or missing
+    stream directory)."""
+    final = _latest_partition(base_dir)
+    if final is None:
+        return spark.createDataFrame([], empty_schema)
+    return spark.read.parquet(final)
 
 
 def tumbling_counts_batch(events: DataFrame) -> DataFrame:
@@ -61,7 +154,6 @@ def read_events_stream(
     stable ``stream_dir`` when restarting from a checkpoint — the
     checkpoint pins the source root path.
     """
-    import os
     import tempfile
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -122,14 +214,7 @@ def run_streaming_stateful_counters(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(out, query_name, mode="update")
     # memory sink in update mode appends snapshots; last row per key wins
     snap = spark.sql(f"SELECT * FROM {query_name}")
     from pyspark.sql import Window
@@ -224,14 +309,7 @@ def run_streaming_transition_matrix(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(out, query_name)
     from pyspark.sql import Window
 
     from pos_pipeline_core_etl_spark.functions.rounding import hround
@@ -257,8 +335,6 @@ def write_batch_idempotent(batch_df: DataFrame, batch_id: int, out_dir: str) -> 
     re-runs with the SAME id, overwrites its own directory, and the sink
     converges to exactly-once. (Same contract a Delta/transactional sink
     provides via txn version; expressed here over plain parquet.)"""
-    import os
-
     batch_df.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"batch_id={batch_id}")
     )
@@ -282,16 +358,12 @@ def run_streaming_foreach_batch(
     enriched = stream.where(F.col("value") > 0).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    q = (
-        enriched.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, bid, out_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        enriched,
+        lambda df, bid: write_batch_idempotent(df, bid, out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
+    return spark.read.parquet(out_dir)
 
 
 def run_streaming_tumbling_counts(spark: SparkSession, sf_dir: str, query_name: str = "events_stream_out") -> DataFrame:
@@ -309,14 +381,7 @@ def run_streaming_tumbling_counts(spark: SparkSession, sf_dir: str, query_name: 
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, query_name, mode="complete")
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -349,14 +414,7 @@ def run_streaming_dedup(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type", hround(F.col("value"), 2).alias("value"))
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(deduped, query_name)
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -423,14 +481,7 @@ def run_streaming_purchase_view_join(
     into a memory sink (``availableNow``); asserted equal to
     :func:`purchase_view_join_batch` in tests."""
     joined = attribution_join_stream(read_events_stream(spark, sf_dir))
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(joined, query_name)
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
@@ -476,27 +527,11 @@ def run_attribution_join_incremental(
             f"ts_encoding must be nanos_long|timestamp_ntz, got {ts_encoding!r}"
         )
     joined = attribution_join_stream(stream)
-    q = (
-        joined.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, bid, out_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        joined,
+        lambda df, bid: write_batch_idempotent(df, bid, out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-
-
-def _prior_partitions(base_dir: str, batch_id: int) -> list[str]:
-    """Index partitions from batches BEFORE ``batch_id`` (this batch's
-    own partition may exist from a failed attempt — excluded)."""
-    import os
-
-    return [
-        os.path.join(base_dir, d)
-        for d in (os.listdir(base_dir) if os.path.isdir(base_dir) else [])
-        if d.startswith("batch_id=") and d != f"batch_id={batch_id}"
-    ]
 
 
 def dedup_index_batch(
@@ -508,9 +543,7 @@ def dedup_index_batch(
 ) -> None:
     """foreachBatch body for streaming incremental dedup: label the
     micro-batch against the accumulated corpus indexes, then fold the
-    batch into them — every write per-batch-id idempotent
-    (at-least-once replay converges, same contract as
-    :func:`write_batch_idempotent`).
+    batch into them (the module partition-state contract).
 
     Two append-only parquet indexes, partitioned by the batch that
     contributed them — exactly the "precomputed indexes" the batch
@@ -525,7 +558,7 @@ def dedup_index_batch(
       never corpus × corpus
 
     Decisions use the index state BEFORE this batch (strict
-    arrival-order semantics: a doc is a dup iff an EARLIER batch
+    arrival-order semantics: a doc is a dup iff an EARLIER batch id
     contained its fingerprint / a near bucket-mate; in-batch exact
     duplicates resolve against the batch's own min id). Precedence
     mirrors the batch operator: dup_exact, then dup_near, then
@@ -544,9 +577,8 @@ def dedup_index_batch(
     spark = batch_df.sparkSession
     fp = fingerprint(batch_df).select("doc_id", "fp")
 
-    prior = _prior_partitions(index_dir, batch_id)
-    if prior:
-        idx = spark.read.option("basePath", index_dir).parquet(*prior)
+    idx = _prior_partitions(spark, index_dir, batch_id)
+    if idx is not None:
         canon = idx.groupBy("fp").agg(F.min("doc_id").alias("exact_dup_of"))
     else:
         canon = (
@@ -568,12 +600,10 @@ def dedup_index_batch(
             minhash_signatures(batch_df, "text", k=LSH_BANDS * LSH_ROWS)
         )
         bb = bb_all.localCheckpoint(eager=False)
-        prior_bands = _prior_partitions(band_index_dir, batch_id)
-        if prior_bands:
-            cb = (
-                spark.read.option("basePath", band_index_dir)
-                .parquet(*prior_bands)
-                .select(F.col("doc_id").alias("corpus_id"), "band", "bucket_key")
+        prior_bands = _prior_partitions(spark, band_index_dir, batch_id)
+        if prior_bands is not None:
+            cb = prior_bands.select(
+                F.col("doc_id").alias("corpus_id"), "band", "bucket_key"
             )
             ok = (
                 cb.groupBy("band", "bucket_key")
@@ -638,18 +668,14 @@ def run_streaming_incremental_dedup(
     if band_index_dir is None:
         band_index_dir = index_dir + "_bands"
     raw = spark.readStream.schema("doc_id long, text string").parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: dedup_index_batch(
-                df, bid, out_dir, index_dir, band_index_dir=band_index_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        raw,
+        lambda df, bid: dedup_index_batch(
+            df, bid, out_dir, index_dir, band_index_dir=band_index_dir
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
+    return spark.read.parquet(out_dir)
 
 
 def run_streaming_windowed_topk(
@@ -673,14 +699,7 @@ def run_streaming_windowed_topk(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.to_date(F.col("window.start")).alias("day"), "event_type", "n")
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(agg, query_name, mode="complete")
     from pyspark.sql import Window
 
     snap = spark.sql(f"SELECT * FROM {query_name}")
@@ -713,9 +732,8 @@ def image_dedup_index_batch(
     dup_exact (identical dhash seen earlier), dup_near (banded Hamming
     ≤ max_hamming vs prior signatures, capped buckets, one-sided —
     never corpus × corpus), dup_in_batch (identical dhash within the
-    batch, min id), else new — then fold the batch's signatures in.
-    Every write is per-batch-id idempotent, so at-least-once replay
-    converges (same contract as the text maintainer)."""
+    batch, min id), else new — then fold the batch's signatures in,
+    under the module partition-state contract."""
     from pos_pipeline_core_etl_spark.operators.dedup import (
         LSH_MAX_BUCKET,
         simhash_band_widths,
@@ -727,20 +745,16 @@ def image_dedup_index_batch(
         eager=False
     )
 
-    prior = _prior_partitions(index_dir, batch_id)
-    if prior:
-        idx = (
-            spark.read.option("basePath", index_dir)
-            .parquet(*prior)
-            .select(F.col("doc_id").alias("corpus_id"), F.col("dhash").alias("c_dhash"))
-            .localCheckpoint(eager=False)
-        )
+    idx = _prior_partitions(spark, index_dir, batch_id)
+    if idx is not None:
+        idx = idx.select(
+            F.col("doc_id").alias("corpus_id"), F.col("dhash").alias("c_dhash")
+        ).localCheckpoint(eager=False)
         canon = idx.groupBy("c_dhash").agg(F.min("corpus_id").alias("exact_dup_of"))
         labeled = sigs.join(
             canon, sigs["dhash"] == canon["c_dhash"], "left"
         ).select("doc_id", "dhash", "exact_dup_of")
     else:
-        idx = None
         labeled = sigs.withColumn("exact_dup_of", F.lit(None).cast("long"))
 
     in_batch = sigs.groupBy("dhash").agg(F.min("doc_id").alias("batch_min"))
@@ -822,16 +836,12 @@ def run_streaming_image_dedup(
     index, capped one-sided banding for the near leg — the corpus is
     never re-hashed and never joined against itself."""
     raw = spark.readStream.schema("doc_id long, payload binary").parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: image_dedup_index_batch(df, bid, out_dir, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        raw,
+        lambda df, bid: image_dedup_index_batch(df, bid, out_dir, index_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
+    return spark.read.parquet(out_dir)
 
 
 FACT_STREAM_SCHEMA = (
@@ -853,19 +863,16 @@ def mart_maintenance_batch(
 
     The maintainable state is the mart's level-1 TICKET-GRAIN partials
     (``operators.payments.per_ticket_partials`` — mergeable: sums add,
-    elimination ORs), written one directory per batch_id (pure function
-    of the batch ⇒ replay overwrites itself, exactly-once like
-    write_batch_idempotent). The day-grain mart is then rebuilt ONLY
-    for the fechas this batch touches — merge the touched slice of all
-    partials, roll up, and dynamic-partition-overwrite those fecha
+    elimination ORs), kept under the module partition-state contract.
+    The day-grain mart is then rebuilt ONLY for the fechas this batch
+    touches — merge the touched slice of this batch's and every earlier
+    batch's partials, roll up, and dynamic-partition-overwrite those fecha
     partitions. Untouched days are never read or rewritten.
 
     100 TB shape: per batch, one batch-sized shuffle (the partials
     agg) + a touched-days-sized merge; the mart converges to the batch
     twin regardless of how facts are sliced across batches (proven in
     tests against build_payments_daily on the union)."""
-    import os
-
     from pos_pipeline_core_etl_spark.operators.payments import (
         daily_from_per_ticket,
         merge_per_ticket,
@@ -878,9 +885,8 @@ def mart_maintenance_batch(
     pt.write.mode("overwrite").parquet(own_dir)
     pt_written = spark.read.parquet(own_dir)
     affected = pt_written.select("fecha").distinct()
-    allp = pt_written
-    for p in _prior_partitions(partials_dir, batch_id):
-        allp = allp.unionByName(spark.read.parquet(p))
+    prior = _prior_partitions(spark, partials_dir, batch_id)
+    allp = pt_written if prior is None else pt_written.unionByName(prior.drop("batch_id"))
     touched = allp.join(F.broadcast(affected), ["fecha"], "left_semi")
     fresh = daily_from_per_ticket(merge_per_ticket(touched), holidays)
     (
@@ -905,17 +911,13 @@ def run_streaming_mart_maintenance(
     the mart equals build_payments_daily over every fact row consumed
     so far — the materialized-view contract."""
     raw = spark.readStream.schema(FACT_STREAM_SCHEMA).parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: mart_maintenance_batch(
-                df, bid, partials_dir, mart_dir, holidays
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        raw,
+        lambda df, bid: mart_maintenance_batch(
+            df, bid, partials_dir, mart_dir, holidays
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return spark.read.parquet(mart_dir)
 
 
@@ -1002,14 +1004,8 @@ def run_streaming_decontaminate_fuzzy(
         )
         write_batch_idempotent(report, batch_id, out_dir)
 
-    q = (
-        raw.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
+    _drain(raw, score_batch, checkpoint_dir)
+    return spark.read.parquet(out_dir)
 
 
 def run_streaming_decontaminate_spans(
@@ -1047,14 +1043,8 @@ def run_streaming_decontaminate_spans(
         out = redact_spans_with_wids(batch_df.select("doc_id", "text"), bw)
         write_batch_idempotent(out, batch_id, out_dir)
 
-    q = (
-        raw.writeStream.foreachBatch(redact_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
+    _drain(raw, redact_batch, checkpoint_dir)
+    return spark.read.parquet(out_dir)
 
 
 def run_streaming_lr_scores(
@@ -1085,14 +1075,8 @@ def run_streaming_lr_scores(
         scored = lr_scores(lr_features(batch_df), w)
         write_batch_idempotent(scored, batch_id, out_dir)
 
-    q = (
-        raw.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.option("basePath", out_dir).parquet(out_dir + "/batch_id=*")
+    _drain(raw, score_batch, checkpoint_dir)
+    return spark.read.parquet(out_dir)
 
 
 def er_link_batch(
@@ -1134,17 +1118,11 @@ def er_link_batch(
         F.explode(deletion_variants_col("key", depth=1)).alias("variant"),
     ).localCheckpoint(eager=False)
 
-    prior = _prior_partitions(key_index_dir, batch_id)
+    prior = _prior_partitions(spark, key_index_dir, batch_id)
     legs = []
-    if prior:
-        pv = (
-            spark.read.option("basePath", key_index_dir)
-            .parquet(*prior)
-            .select(
-                F.col("id").alias("pid"),
-                F.col("key").alias("pkey"),
-                "variant",
-            )
+    if prior is not None:
+        pv = prior.select(
+            F.col("id").alias("pid"), F.col("key").alias("pkey"), "variant"
         )
         ok = (
             pv.groupBy("variant")
@@ -1206,26 +1184,15 @@ def run_streaming_entity_resolution(
     from pos_pipeline_core_etl_spark.operators.dedup import connected_components
 
     raw = spark.readStream.schema("id long, key string").parquet(stream_dir)
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: er_link_batch(
-                df, bid, links_dir, key_index_dir, max_bucket_size=max_bucket_size
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        raw,
+        lambda df, bid: er_link_batch(
+            df, bid, links_dir, key_index_dir, max_bucket_size=max_bucket_size
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    keys = (
-        spark.read.option("basePath", key_index_dir)
-        .parquet(key_index_dir + "/batch_id=*")
-        .select("id", "key")
-        .distinct()
-    )
-    links = spark.read.option("basePath", links_dir).parquet(
-        links_dir + "/batch_id=*"
-    )
+    keys = spark.read.parquet(key_index_dir).select("id", "key").distinct()
+    links = spark.read.parquet(links_dir)
     comps = connected_components(links.distinct(), src="id_a", dst="id_b")
     return keys.join(
         comps.select("id", "component_id"), "id", "left"
@@ -1256,9 +1223,8 @@ def kmv_sketch_batch(
     2. unions them with the prior sketch and re-takes the k smallest
        per group (the KMV merge — union of top-ks contains the true
        top-k, so intermediate arrival order is irrelevant);
-    3. writes the full new sketch per-batch-id idempotently (replayed
-       batches read only partitions with SMALLER ids, so at-least-once
-       delivery converges — :func:`write_batch_idempotent` contract);
+    3. writes the full new sketch under its own batch id (the module
+       partition-state contract);
     4. snapshots the current per-group estimates to ``out_dir``.
 
     Stream ≡ batch and chunking invariance are pinned in
@@ -1281,13 +1247,8 @@ def kmv_sketch_batch(
         )
         .distinct()
     )
-    prior = [
-        p
-        for p in _prior_partitions(sketch_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(sketch_dir, before=batch_id)
+    if latest is not None:
         merged = (
             spark.read.parquet(latest)
             .select("grp", "h")
@@ -1329,42 +1290,16 @@ def run_streaming_kmv_sketch(
     per-group estimate snapshot (the highest batch_id partition — the
     state after the whole stream, which the tests assert equals the
     one-shot batch estimate on the same rows)."""
-    import os
-
-    # one file per micro-batch (availableNow honors the cap and splits
-    # the backlog) so the maintainer demonstrably runs INCREMENTALLY —
-    # without it the whole backlog collapses into a single batch and
-    # the merge leg never executes
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: kmv_sketch_batch(
+            df, bid, out_dir, sketch_dir, group_col, key_col, k
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: kmv_sketch_batch(
-                df, bid, out_dir, sketch_dir, group_col, key_col, k
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(out_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(out_dir)
-        else []
-    )
-    if not parts:
-        # drained stream produced zero batches (empty/missing
-        # stream_dir) — return the empty estimate frame instead of an
-        # opaque max()/listdir error (ADVICE r10 #3); the snapshot
-        # always carries (grp, kmv_estimate) — the maintainer aliases
-        # group_col to "grp"
-        return spark.createDataFrame([], "grp string, kmv_estimate double")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(out_dir, final))
+    # the snapshot always carries (grp, kmv_estimate) — the maintainer
+    # aliases group_col to "grp"
+    return _final_state(spark, out_dir, "grp string, kmv_estimate double")
 
 
 def cms_counter_batch(
@@ -1384,10 +1319,8 @@ def cms_counter_batch(
     depth×width counter table (batch-sized work, bounded output), union
     with the latest accumulated table, and re-sum per (d, b) cell.
     State is the latest counter partition only — at most depth×width
-    rows regardless of drained volume.  Writes are per-batch-id
-    idempotent (:func:`write_batch_idempotent`), so at-least-once
-    replays converge: a replayed batch re-reads only STRICTLY-smaller
-    batch ids and overwrites its own partition.
+    rows regardless of drained volume, kept under the module
+    partition-state contract.
 
     Stream ≡ batch and chunking invariance are pinned in
     tests/test_streaming.py::TestStreamingCms with the same
@@ -1397,13 +1330,8 @@ def cms_counter_batch(
 
     spark = batch_df.sparkSession
     batch_counters = cms_counters(batch_df, key_col, depth, width)
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(counter_dir, before=batch_id)
+    if latest is not None:
         merged = (
             spark.read.parquet(latest)
             .unionByName(batch_counters)
@@ -1429,33 +1357,14 @@ def run_streaming_cms_sketch(
     with availableNow and return the FINAL (d, b, cnt) counter table —
     which the tests assert equals the one-shot batch
     ``cms_counters`` on the same rows, cell for cell."""
-    import os
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: cms_counter_batch(
+            df, bid, counter_dir, key_col, depth, width
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: cms_counter_batch(
-                df, bid, counter_dir, key_col, depth, width
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
-    if not parts:
-        return spark.createDataFrame([], "d int, b bigint, cnt bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return _final_state(spark, counter_dir, "d int, b bigint, cnt bigint")
 
 
 def hist_counter_batch(
@@ -1481,9 +1390,8 @@ def hist_counter_batch(
     the micro-batches partition the row multiset — so folding a batch
     in is: bucket the batch (batch-sized work, ≤``buckets``-row
     output), union with the latest accumulated table, re-sum per cell.
-    State is the latest counter partition only.  Writes are
-    per-batch-id idempotent (:func:`write_batch_idempotent`), so
-    at-least-once replays converge.
+    State is the latest counter partition only, kept under the module
+    partition-state contract.
 
     Stream ≡ batch and chunking invariance are pinned in
     tests/test_streaming.py::TestStreamingHist with the same
@@ -1495,13 +1403,8 @@ def hist_counter_batch(
 
     spark = batch_df.sparkSession
     batch_counters = hist_counters_fixed(batch_df, value_col, mn, mx, buckets)
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(counter_dir, before=batch_id)
+    if latest is not None:
         merged = (
             spark.read.parquet(latest)
             .unionByName(batch_counters)
@@ -1528,33 +1431,14 @@ def run_streaming_hist_sketch(
     availableNow and return the FINAL (b, cnt) counter table — which
     the tests assert equals the one-shot ``hist_counters_fixed`` on the
     same rows, cell for cell (the mergeability proof, streamed)."""
-    import os
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: hist_counter_batch(
+            df, bid, counter_dir, value_col, mn, mx, buckets
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: hist_counter_batch(
-                df, bid, counter_dir, value_col, mn, mx, buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
-    if not parts:
-        return spark.createDataFrame([], "b bigint, cnt bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return _final_state(spark, counter_dir, "b bigint, cnt bigint")
 
 
 def hist_grouped_counter_batch(
@@ -1575,7 +1459,7 @@ def hist_grouped_counter_batch(
     still elementwise addition, now per ``(g, b)`` cell; state is
     ``groups × buckets`` rows, so the group column must be an enum-
     bounded key by contract (the ``hist_quantiles_grouped``
-    cardinality rule).  Same idempotent per-batch-id writes; clamp and
+    cardinality rule).  Module partition-state contract; clamp and
     stream ≡ batch proven in
     tests/test_streaming.py::TestStreamingHistGrouped under the
     maxFilesPerTrigger=1 multi-batch drain guard."""
@@ -1587,13 +1471,8 @@ def hist_grouped_counter_batch(
     batch_counters = hist_counters_fixed_grouped(
         batch_df, group_col, value_col, mn, mx, buckets
     )
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(counter_dir, before=batch_id)
+    if latest is not None:
         merged = (
             spark.read.parquet(latest)
             .unionByName(batch_counters)
@@ -1621,33 +1500,14 @@ def run_streaming_hist_grouped_sketch(
     with availableNow and return the FINAL ``(g, b, cnt)`` counter
     table — asserted equal to the one-shot
     ``hist_counters_fixed_grouped`` on the same rows, cell for cell."""
-    import os
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: hist_grouped_counter_batch(
+            df, bid, counter_dir, group_col, value_col, mn, mx, buckets
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: hist_grouped_counter_batch(
-                df, bid, counter_dir, group_col, value_col, mn, mx, buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
-    if not parts:
-        return spark.createDataFrame([], "g string, b bigint, cnt bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return _final_state(spark, counter_dir, "g string, b bigint, cnt bigint")
 
 
 def priority_sketch_batch(
@@ -1673,11 +1533,8 @@ def priority_sketch_batch(
       state, so the maintainer's contract is per-ROW observations;
       batches partition the row multiset).
 
-    Both are written per-batch-id idempotently
-    (:func:`write_batch_idempotent`): a replayed batch recomputes from
-    partitions with SMALLER ids and overwrites its own id, so
-    at-least-once delivery converges.  The final readout reassembles
-    the summary through the SAME
+    Both follow the module partition-state contract.  The final
+    readout reassembles the summary through the SAME
     ``sketches.priority_summary_from_parts`` the one-shot operator
     uses, so stream ≡ batch is an identity of parts, not a parallel
     implementation."""
@@ -1712,17 +1569,7 @@ def priority_sketch_batch(
         F.coalesce(F.sum("w"), F.lit(0.0)).alias("w_exact"),
     )
 
-    def _latest(base_dir: str):
-        prior = [
-            p
-            for p in _prior_partitions(base_dir, batch_id)
-            if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-        ]
-        if not prior:
-            return None
-        return max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
-
-    latest_sk = _latest(sketch_dir)
+    latest_sk = _latest_partition(sketch_dir, before=batch_id)
     if latest_sk is not None:
         merged = (
             spark.read.parquet(latest_sk)
@@ -1742,7 +1589,7 @@ def priority_sketch_batch(
         .filter(F.col("rn") <= k + 1)
         .localCheckpoint(eager=True)
     )
-    latest_tot = _latest(totals_dir)
+    latest_tot = _latest_partition(totals_dir, before=batch_id)
     if latest_tot is not None:
         prior_tot = spark.read.parquet(latest_tot)
         tot = (
@@ -1776,42 +1623,19 @@ def run_streaming_priority_sample(
     SAME ``priority_summary_from_parts`` the one-shot operator uses,
     which the tests assert equals the one-shot summary on the same
     rows."""
-    import os
-
     from pos_pipeline_core_etl_spark.operators.sketches import (
         priority_summary_from_parts,
     )
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: priority_sketch_batch(
+            df, bid, sketch_dir, totals_dir, key_col, weight_col, k
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: priority_sketch_batch(
-                df, bid, sketch_dir, totals_dir, key_col, weight_col, k
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    def _final(base_dir: str):
-        parts = (
-            [d for d in os.listdir(base_dir) if d.startswith("batch_id=")]
-            if os.path.isdir(base_dir)
-            else []
-        )
-        if not parts:
-            return None
-        final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-        return spark.read.parquet(os.path.join(base_dir, final))
-
-    ranked = _final(sketch_dir)
-    exact = _final(totals_dir)
+    ranked = _latest_partition(sketch_dir)
+    exact = _latest_partition(totals_dir)
     if ranked is None or exact is None:
         return spark.createDataFrame(
             [],
@@ -1819,7 +1643,9 @@ def run_streaming_priority_sample(
             "tau double, w_total_exact double, w_total_estimate double, "
             "rel_err double",
         )
-    return priority_summary_from_parts(exact, ranked, k)
+    return priority_summary_from_parts(
+        spark.read.parquet(exact), spark.read.parquet(ranked), k
+    )
 
 
 def bloom_word_batch(
@@ -1837,21 +1663,16 @@ def bloom_word_batch(
     merge is elementwise ``bit_or``, which is associative, commutative
     AND idempotent, so a replayed batch cannot even transiently skew
     the state (strictly stronger than the counter maintainers, whose
-    convergence relies on the per-batch-id overwrite alone).  Same
-    idempotent per-batch-id writes; stream ≡ batch proven in
+    convergence relies on the per-batch-id overwrite alone).  Module
+    partition-state contract; stream ≡ batch proven in
     tests/test_streaming.py::TestStreamingBloom under the
     maxFilesPerTrigger=1 multi-batch drain guard."""
     from pos_pipeline_core_etl_spark.operators.sketches import bloom_words
 
     spark = batch_df.sparkSession
     batch_words = bloom_words(batch_df, key_col, words, n_hashes)
-    prior = [
-        p
-        for p in _prior_partitions(state_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(state_dir, before=batch_id)
+    if latest is not None:
         merged = (
             spark.read.parquet(latest)
             .unionByName(batch_words)
@@ -1877,33 +1698,14 @@ def run_streaming_bloom_sketch(
     availableNow and return the FINAL ``(word_idx, word)`` table —
     asserted equal to the one-shot ``bloom_words`` on the same rows,
     bit for bit."""
-    import os
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: bloom_word_batch(
+            df, bid, state_dir, key_col, words, n_hashes
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: bloom_word_batch(
-                df, bid, state_dir, key_col, words, n_hashes
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(state_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(state_dir)
-        else []
-    )
-    if not parts:
-        return spark.createDataFrame([], "word_idx bigint, word bigint")
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(state_dir, final))
+    return _final_state(spark, state_dir, "word_idx bigint, word bigint")
 
 
 def rollup_cascade_batch(
@@ -1940,7 +1742,7 @@ def rollup_cascade_batch(
     sketch IS the bounded answer, and the one-shot query reports both
     precisely so the estimator error stays visible where the exact
     count is still affordable.  Per-row observation contract and
-    per-batch-id idempotent writes as in the sibling maintainers;
+    the module partition-state contract as in the sibling maintainers;
     stream ≡ batch and chunking invariance pinned in
     tests/test_streaming.py::TestStreamingRollup."""
     from pyspark.sql import Window
@@ -1953,13 +1755,8 @@ def rollup_cascade_batch(
     batch_counters = batch_df.groupBy(*cell).agg(
         F.count("*").alias("cnt"), F.sum(value_col).alias("sv")
     )
-    prior_c = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior_c:
-        latest = max(prior_c, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(counter_dir, before=batch_id)
+    if latest is not None:
         merged_c = (
             spark.read.parquet(latest)
             .unionByName(batch_counters)
@@ -1978,13 +1775,8 @@ def rollup_cascade_batch(
         .filter(F.col("rn") <= k)
         .drop("rn")
     )
-    prior_s = [
-        p
-        for p in _prior_partitions(sketch_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior_s:
-        latest = max(prior_s, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(sketch_dir, before=batch_id)
+    if latest is not None:
         union = (
             spark.read.parquet(latest)
             .select("day", "event_type", "h")
@@ -2019,40 +1811,16 @@ def run_streaming_rollup(
     (day, event_type, n_events, sum_value, users_kmv) from the two
     state tables — asserted cell-for-cell against the one-shot cascade
     on the same rows (sums exactly, estimates bit-for-bit)."""
-    import os
-
     from pos_pipeline_core_etl_spark.operators.sketches import kmv_estimate_col
 
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: rollup_cascade_batch(
+            df, bid, counter_dir, sketch_dir, k=k
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: rollup_cascade_batch(
-                df, bid, counter_dir, sketch_dir, k=k
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    def _final(base: str) -> str | None:
-        parts = (
-            [d for d in os.listdir(base) if d.startswith("batch_id=")]
-            if os.path.isdir(base)
-            else []
-        )
-        if not parts:
-            return None
-        return os.path.join(
-            base, max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-        )
-
-    c_part, s_part = _final(counter_dir), _final(sketch_dir)
+    c_part, s_part = _latest_partition(counter_dir), _latest_partition(sketch_dir)
     if c_part is None:
         return spark.createDataFrame(
             [],
@@ -2093,8 +1861,8 @@ def cms_grouped_counter_batch(
     column must be an enum-bounded key by contract (the
     ``hist_quantiles_grouped`` cardinality rule — and as in the
     one-shot :func:`~pos_pipeline_core_etl_spark.operators.sketches.
-    cms_counters_grouped`, nothing here forces a broadcast).  Same
-    idempotent per-batch-id writes; stream ≡ batch and group
+    cms_counters_grouped`, nothing here forces a broadcast).  Module
+    partition-state contract; stream ≡ batch and group
     isolation proven in
     tests/test_streaming.py::TestStreamingCMSGrouped under the
     maxFilesPerTrigger=1 multi-batch drain guard."""
@@ -2106,13 +1874,8 @@ def cms_grouped_counter_batch(
     batch_counters = cms_counters_grouped(
         batch_df, group_col, key_col, depth, width
     )
-    prior = [
-        p
-        for p in _prior_partitions(counter_dir, batch_id)
-        if int(p.rsplit("batch_id=", 1)[1]) < batch_id
-    ]
-    if prior:
-        latest = max(prior, key=lambda p: int(p.rsplit("batch_id=", 1)[1]))
+    latest = _latest_partition(counter_dir, before=batch_id)
+    if latest is not None:
         merged = (
             spark.read.parquet(latest)
             .unionByName(batch_counters)
@@ -2139,32 +1902,11 @@ def run_streaming_cms_grouped_sketch(
     with availableNow and return the FINAL ``(g, d, b, cnt)`` counter
     table — asserted equal to the one-shot ``cms_counters_grouped`` on
     the same rows, cell for cell."""
-    import os
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force a real multi-batch drain
-        .parquet(stream_dir)
+    _drain(
+        _chunked_stream(spark, schema, stream_dir),
+        lambda df, bid: cms_grouped_counter_batch(
+            df, bid, counter_dir, group_col, key_col, depth, width
+        ),
+        checkpoint_dir,
     )
-    q = (
-        raw.writeStream.foreachBatch(
-            lambda df, bid: cms_grouped_counter_batch(
-                df, bid, counter_dir, group_col, key_col, depth, width
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    parts = (
-        [d for d in os.listdir(counter_dir) if d.startswith("batch_id=")]
-        if os.path.isdir(counter_dir)
-        else []
-    )
-    if not parts:
-        return spark.createDataFrame(
-            [], "g string, d int, b bigint, cnt bigint"
-        )
-    final = max(parts, key=lambda d: int(d.rsplit("=", 1)[1]))
-    return spark.read.parquet(os.path.join(counter_dir, final))
+    return _final_state(spark, counter_dir, "g string, d int, b bigint, cnt bigint")
