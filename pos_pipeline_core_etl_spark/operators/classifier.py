@@ -6,19 +6,20 @@ pipeline runs at corpus scale: hand-engineered text statistics as
 features, a cheap linear model trained on a weak label (here: a
 curated-language flag), scores used to gate or re-weight documents.
 
-100 TB shape — every step is a DataFrame op, zero driver collection:
+100 TB shape — every step is a DataFrame op; the driver collects only
+d+1 longs per training epoch:
 
 - features: one narrow projection over ``documents`` (reuses
-  :func:`operators.text.quality_score`'s deterministic statistics);
-  lazily localCheckpointed because the GD plan consumes it once per
-  iteration plus once for scoring (checkpoint SMALL frames — six
-  doubles per row, far narrower than the text it derives from).
-- train: full-batch gradient descent. The weight vector lives in ONE
-  broadcast row; each iteration is a map-side margin/sigmoid fold plus
-  a single global hash-agg with map-side partials (the only shuffle,
-  and it reduces to ``d+2`` numbers per partition). ``iters``
-  iterations = ``iters`` chained aggregations in one lazy plan — the
-  :func:`operators.similarity.kmeans_lloyd` shape.
+  :func:`operators.text.quality_score`'s deterministic statistics).
+  The training plans checkpoint it lazily once
+  (plans/classifier_queries.py), because GD reads it once per epoch
+  plus once for scoring (checkpoint SMALL frames — six doubles per
+  row, far narrower than the text it derives from).
+- train: full-batch gradient descent. Each epoch is a map-side
+  margin/sigmoid fold plus a single global agg with map-side partials
+  (the only shuffle, reducing to ``d+1`` numbers per partition); its
+  ``d+1`` sums are collected and the updated weights enter the next
+  epoch's plan as literals.
 - determinism: per-doc gradient contributions are quantized to BIGINT
   (``floor(g * Q + 0.5)``) before summing, so the global sum is exact
   integer math — order-free, bit-identical across engines and
@@ -88,6 +89,10 @@ def logistic_gd(
 ) -> DataFrame:
     """Full-batch GD -> ONE row (w0..w4).
 
+    ``feats`` is read once per epoch and is not checkpointed here: the
+    caller passes a frame it may read ``iters`` times (the registry
+    plans pass a lazily checkpointed one).
+
     Weights start at exactly 0.0 (sigmoid(0) = 0.5 — the first
     gradient is pure rational arithmetic, so engines agree exactly
     from step one). Each iteration computes quantized per-doc gradient
@@ -112,7 +117,6 @@ def logistic_gd(
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     spark = feats.sparkSession
-    base = feats.localCheckpoint(eager=False)
     qf = float(quant)
     weights = [0.0] * N_FEATURES
     for _ in range(iters):
@@ -128,7 +132,7 @@ def logistic_gd(
             for k in range(N_FEATURES)
         ]
         row = (
-            base.select(*grads)
+            feats.select(*grads)
             .agg(
                 *[F.sum(f"g{k}").alias(f"s{k}") for k in range(N_FEATURES)],
                 F.count(F.lit(1)).alias("n"),

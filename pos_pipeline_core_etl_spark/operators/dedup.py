@@ -29,7 +29,7 @@ from pos_pipeline_core_etl_spark.operators.common import (
     ensure_parallelism,
     release_checkpoint,
 )
-from pos_pipeline_core_etl_spark.operators.text import TOKEN_SPLIT_RE
+from pos_pipeline_core_etl_spark.operators.text import tokens_col
 
 # Default MinHash parameters: k hash functions in b bands × r rows (k = b*r).
 # Sensitivity (standard LSH S-curve): a pair with Jaccard s collides with
@@ -62,7 +62,7 @@ def _hash_params(k: int = MINHASH_K) -> list[tuple[int, int]]:
 
 def shingles_col(text: Column, n: int = SHINGLE_SIZE) -> Column:
     """Distinct word n-gram shingles of the lowercased text."""
-    t = F.split(F.trim(F.lower(text)), TOKEN_SPLIT_RE)
+    t = tokens_col(F.lower(text))
     idx = F.sequence(F.lit(0), F.size(t) - n)
     grams = F.transform(
         idx,
@@ -598,7 +598,7 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -
     tokens = ensure_parallelism(docs).select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE))
+            F.array_distinct(tokens_col(F.lower(F.col(text_col))))
         ).alias("tok"),
     ).withColumn("h", F.conv(F.substring(F.md5(F.col("tok")), 1, hexw), 16, 10).cast("long"))
     # F.expr, not hand-built Column trees (the minhash_signatures rule):
@@ -1131,7 +1131,7 @@ def window_grams(
     Unlike :func:`shingles_col` these are NOT distinct — each occurrence
     counts, so repeated spans inside one doc still surface when another
     doc shares them."""
-    t = F.split(F.trim(F.lower(text)), TOKEN_SPLIT_RE)
+    t = tokens_col(F.lower(text))
     grams = F.transform(
         _anchor_positions(t, window, stride),
         lambda i: F.array_join(F.slice(t, i + 1, window), " "),
@@ -1209,7 +1209,7 @@ def remove_duplicate_spans(
     bounded by windows-per-doc, never corpus-sized), and a map-side
     token filter via an indexed lambda; the rebuilt text never shuffles.
     """
-    t_lower = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
+    t_lower = tokens_col(F.lower(F.col(text_col)))
     grams = F.when(
         F.size(t_lower) >= window,
         F.transform(
@@ -1235,7 +1235,7 @@ def remove_duplicate_spans(
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_set("pos")).alias("rm"))
     )
-    t_orig = F.split(F.trim(F.col(text_col)), TOKEN_SPLIT_RE)
+    t_orig = tokens_col(F.col(text_col))
     rm = F.coalesce(F.col("rm"), F.array().cast("array<int>"))
     kept = F.filter(
         t_orig,
@@ -1317,7 +1317,7 @@ def redact_spans_with_wids(
     window id appears in ``bench_wids`` removed. Per-doc only (one
     explode + one broadcast join + a map-side token filter), so it
     serves batch and per-micro-batch callers identically."""
-    t_lower = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
+    t_lower = tokens_col(F.lower(F.col(text_col)))
     grams = F.when(
         F.size(t_lower) >= window,
         F.transform(
@@ -1338,7 +1338,7 @@ def redact_spans_with_wids(
         .groupBy(id_col)
         .agg(F.array_sort(F.collect_set("pos")).alias("rm"))
     )
-    t_orig = F.split(F.trim(F.col(text_col)), TOKEN_SPLIT_RE)
+    t_orig = tokens_col(F.col(text_col))
     rm = F.coalesce(F.col("rm"), F.array().cast("array<int>"))
     kept = F.filter(
         t_orig,
@@ -1371,7 +1371,7 @@ def winnow_fingerprints_col(
     """Sorted distinct winnowing fingerprints (60-bit k-gram hashes) of
     the lowercased text; empty array when the doc has < k + w - 1
     tokens (no full window). Pure map-side array expressions."""
-    t = F.split(F.trim(F.lower(text)), TOKEN_SPLIT_RE)
+    t = tokens_col(F.lower(text))
     n = F.size(t)
     grams = F.transform(
         F.sequence(F.lit(0), n - k),
@@ -1398,7 +1398,7 @@ def winnow_stats(
     hround(6) density, so the oracle is bit-exact."""
     from pos_pipeline_core_etl_spark.functions.rounding import hround
 
-    t = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
+    t = tokens_col(F.lower(F.col(text_col)))
     n_kgrams = F.greatest(F.size(t) - k + 1, F.lit(0))
     fps = winnow_fingerprints_col(F.col(text_col), k, w)
     return ensure_parallelism(docs.select("doc_id", text_col)).select(

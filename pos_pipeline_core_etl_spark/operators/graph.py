@@ -27,8 +27,9 @@ edge list annotated with out-degrees once, lineage cut per iteration.
 from __future__ import annotations
 
 import operator
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pos_pipeline_core_etl_spark.operators.common import (
@@ -80,6 +81,20 @@ def copurchase_edges(
     )
 
 
+def symmetric_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) in both directions: the undirected (src < dst) edge
+    list as the directed adjacency every degree and walk reads."""
+    return edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def node_degrees(sym: DataFrame, name: str = "deg") -> DataFrame:
+    """(src, ``name``): each node's degree over a :func:`symmetric_edges`
+    frame."""
+    return sym.groupBy("src").agg(F.count(F.lit(1)).alias(name))
+
+
 def triangle_counts(edges: DataFrame) -> DataFrame:
     """(node, n_triangles) for every node of the (src < dst) edge list
     that participates in at least one triangle. Classic ordered
@@ -118,10 +133,7 @@ def triangle_counts_oriented(edges: DataFrame) -> DataFrame:
     One degree aggregation + one broadcast-or-shuffle annotate join,
     then the same three-relation equi-join shape as the plain form —
     no new shuffle class."""
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    deg = node_degrees(symmetric_edges(edges))
     e = (
         edges.join(deg.select(F.col("src"), F.col("deg").alias("deg_s")), "src")
         .join(
@@ -162,12 +174,10 @@ def pagerank_fixedpoint(
 ) -> DataFrame:
     """(node, rank_q): fixed-point PageRank after ``iters`` synchronous
     iterations over the symmetrized (src < dst) edge list. rank_q is the
-    rank in integer ``1/scale`` units.
-
-    Update rule (all integer, both engines):
-        contrib(u)  = rank_q(u) DIV outdeg(u)
-        rank_q'(v)  = base_q + (damping_pct * Σ_{u→v} contrib(u)) DIV 100
-        base_q      = ((100 - damping_pct) * scale) DIV (100 * n)
+    rank in integer ``1/scale`` units; the integer update rule is
+    :func:`_pagerank_step_delta`'s, with the uniform restart term
+    base_q = ((100 - damping_pct) * scale) DIV (100 * n) and the walk
+    starting from scale DIV n on every node.
 
     Every node has outdeg >= 1 (the node set IS the edge endpoints of an
     undirected graph), so there is no dangling mass to redistribute;
@@ -176,10 +186,9 @@ def pagerank_fixedpoint(
     scalar (one count over the node set — graph-dimension-sized, the
     bounded-scalar class of collect).
 
-    Per iteration: one join of the degree-annotated edge list with the
-    current ranks + one keyed sum by destination; the edge list is
-    checkpointed once, ranks lineage-cut per round (the
-    connected_components loop discipline)."""
+    The ``iters`` steps are ONE lazy chain (:func:`_pagerank_walk`):
+    the caller's action materializes every iterate, so a fixed count
+    pays no per-round probe job."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     annotated, nodes, n = _pagerank_setup(edges)
@@ -189,14 +198,16 @@ def pagerank_fixedpoint(
         # re-read, SELFREVIEW_r8)
         return nodes.withColumn("rank_q", F.lit(0).cast("long"))
     ranks = nodes.withColumn("rank_q", F.lit(scale // n).cast("long"))
-    for _ in range(iters):
-        ranks = _pagerank_step(annotated, nodes, ranks, n, damping_pct, scale)
-    return ranks
+    restart = F.lit(((100 - damping_pct) * scale) // (100 * n))
+    walk = _pagerank_walk(annotated, ranks, restart, iters, damping_pct)
+    return walk[-1].select("node", "rank_q")
 
 
 def _pagerank_setup(edges: DataFrame):
     """Shared iteration setup: symmetrized + degree-annotated edge list
-    (checkpointed once), the node set, and its bounded count.
+    and the node set (both checkpointed once), and the node count.  The
+    symmetric edge list they are built from is freed once both have
+    materialized.
 
     r12 note (measured, guide §1): caching the annotated list
     HASH-PARTITIONED on ``src`` (SQL cache preserves partitioning, so
@@ -208,95 +219,81 @@ def _pagerank_setup(edges: DataFrame):
     cheapest per-round source at bench scale; at cluster scale the
     lazy loops pay the exchange once per ACTION via ReuseExchange
     anyway."""
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    sym = symmetric_edges(edges).localCheckpoint(eager=True)
+    deg = node_degrees(sym, "outdeg")
     annotated = sym.join(deg, "src").localCheckpoint(eager=True)
     nodes = deg.select(F.col("src").alias("node")).localCheckpoint(eager=True)
+    release_checkpoint(sym)
     return annotated, nodes, nodes.count()
-
-
-def _pagerank_step(
-    annotated: DataFrame,
-    nodes: DataFrame,
-    ranks: DataFrame,
-    n: int,
-    damping_pct: int,
-    scale: int,
-) -> DataFrame:
-    """ONE synchronous fixed-point iteration (see update rule above)."""
-    base_q = ((100 - damping_pct) * scale) // (100 * n)
-    contrib = annotated.join(ranks, annotated.src == ranks.node).select(
-        F.col("dst").alias("node"),
-        F.expr("rank_q DIV outdeg").alias("c"),
-    )
-    sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-    return (
-        nodes.join(sums, "node", "left")
-        .select(
-            "node",
-            (
-                F.lit(base_q)
-                + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-            )
-            .cast("long")
-            .alias("rank_q"),
-        )
-        .localCheckpoint(eager=False)
-    )
 
 
 def _pagerank_step_delta(
     annotated: DataFrame,
     ranks: DataFrame,
-    n: int,
+    restart: Column,
     damping_pct: int,
-    scale: int,
 ) -> DataFrame:
-    """:func:`_pagerank_step` fused with its own convergence probe
-    input: returns the lazily-checkpointed ``(node, prev_q, rank_q)``
-    iterate (r12, guide §2.4 — remove shuffles outright).
+    """ONE synchronous fixed-point iteration, the step every PageRank
+    loop here runs.  Update rule (all integer, both engines):
 
-    The convergence loops previously re-joined ``ranks`` against the
-    new iterate just to pair old and new rank per node — one extra
-    node-sized shuffle join PER ROUND whose only purpose was the
-    |delta| aggregate.  ``ranks`` carries exactly the node set (every
-    iterate is produced by a left join FROM the node frame), so joining
-    ``ranks`` (instead of ``nodes``) with the contribution sums yields
-    the same rank_q while the previous rank rides along as ``prev_q``
-    for free; the probe then aggregates the checkpointed frame with no
-    join at all.  Per round this deletes one join + two node-sized
-    exchange sides at ANY scale — the 100 TB win is proportional to
-    the node count, the local win is the per-round stage/planning
-    overhead (profile: graph_part_pagerank_tol was 90 jobs with 0.7
+        contrib(u)  = rank_q(u) DIV outdeg(u)
+        rank_q'(v)  = restart(v) + (damping_pct * Σ_{u→v} contrib(u)) DIV 100
+
+    ``restart`` is the restart term: the literal base_q for the global
+    walk, base_q on seeds and 0 elsewhere for the personalized one.
+    Returns the lazily-checkpointed iterate: ``ranks``' other columns
+    (``node`` and any per-node flag ``restart`` reads), then
+    ``prev_q`` (the input rank) and ``rank_q``.
+
+    Fused with its own convergence probe input (r12, guide §2.4 —
+    remove shuffles outright): ``ranks`` carries exactly the node set
+    (every iterate is produced by a left join FROM the previous one),
+    so joining ``ranks`` with the contribution sums yields the new
+    rank_q while the previous rank rides along as ``prev_q`` for free;
+    an |delta| probe then aggregates the checkpointed frame with no
+    join at all.  Against re-joining old and new ranks this deletes one
+    join + two node-sized exchange sides per round at ANY scale
+    (profile: graph_part_pagerank_tol was 90 jobs with 0.7
     executor-seconds — pure per-round fixed cost)."""
-    base_q = ((100 - damping_pct) * scale) // (100 * n)
     contrib = annotated.join(ranks, annotated.src == ranks.node).select(
         F.col("dst").alias("node"),
         F.expr("rank_q DIV outdeg").alias("c"),
     )
     sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+    carried = [c for c in ranks.columns if c not in ("prev_q", "rank_q")]
     return (
         ranks.join(sums, "node", "left")
         .select(
-            "node",
+            *carried,
             F.col("rank_q").alias("prev_q"),
-            (
-                F.lit(base_q)
-                + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-            )
+            (restart + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100"))
             .cast("long")
             .alias("rank_q"),
         )
         .localCheckpoint(eager=False)
     )
+
+
+def _pagerank_walk(
+    annotated: DataFrame,
+    ranks: DataFrame,
+    restart: Column,
+    iters: int,
+    damping_pct: int,
+) -> list[DataFrame]:
+    """The fixed-count loop: the ``iters`` successive iterates of
+    :func:`_pagerank_step_delta` from ``ranks``, chained lazily.
+
+    It stays a lazy chain rather than running on
+    :func:`~operators.common.converge`: a converge-driven 10-iteration
+    walk returned identical rows but took graph_part_pagerank from a
+    2.74 s to a 3.43 s median (sf0.1, ``local[4]``, 4-core VM, 3 warm
+    reps), since 10 rounds cost 6 probe collects."""
+    walk = []
+    for _ in range(iters):
+        ranks = _pagerank_step_delta(annotated, ranks, restart, damping_pct)
+        walk.append(ranks)
+    return walk
 
 
 def pagerank_converged(
@@ -319,11 +316,11 @@ def pagerank_converged(
     stop_iter can sit in the oracle-checked output.  The per-iteration
     convergence check is one bounded 1-row aggregate (sum of |delta|
     over the node set — the same dimension class as the setup's node
-    count); iteration cost is otherwise identical to
-    ``pagerank_fixedpoint``.  A healthy damped walk contracts roughly
-    geometrically until the integer-dust floor (~nodes x rounding), so
-    ``tol_q`` must sit above that floor for the graph dimension at
-    hand — at the floor the delta plateaus instead of shrinking."""
+    count); the step is ``pagerank_fixedpoint``'s.  A healthy damped
+    walk contracts roughly geometrically until the integer-dust floor
+    (~nodes x rounding), so ``tol_q`` must sit above that floor for the
+    graph dimension at hand — at the floor the delta plateaus instead
+    of shrinking."""
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     annotated, nodes, n = _pagerank_setup(edges)
@@ -334,13 +331,12 @@ def pagerank_converged(
             F.lit(0).cast("long").alias("stop_iter"),
         )
     ranks = nodes.withColumn("rank_q", F.lit(scale // n).cast("long"))
+    restart = F.lit(((100 - damping_pct) * scale) // (100 * n))
     # each iterate carries its own prev_q, so the probe is join-free;
     # batching and checkpoint release: see converge
     final, stop, _ = converge(
         ranks,
-        lambda it: _pagerank_step_delta(
-            annotated, it.select("node", "rank_q"), n, damping_pct, scale
-        ),
+        lambda it: _pagerank_step_delta(annotated, it, restart, damping_pct),
         F.sum(F.abs(F.col("rank_q") - F.col("prev_q"))),
         lambda _prev, d: d <= tol_q,
         max_iters,
@@ -364,57 +360,37 @@ def pagerank_personalized(
     the random walk restarts only at ``seeds`` (one column ``node``),
     so ranks measure proximity TO THE SEED SET rather than global
     influence: "parts co-purchased near THESE parts", the
-    recommendation / expansion primitive. Same integer contract as
-    :func:`pagerank_fixedpoint` (nano-unit ranks, floor-division
-    contributions, order-free integer sums — bit-exact cross-engine);
-    the only change is the restart term: base_q(v) =
-    ((100-d)·scale) DIV (100·n_seeds) for seed nodes, 0 elsewhere,
-    and the walk starts from the seed distribution (scale DIV n_seeds
-    on seeds, 0 elsewhere). Seeds outside the node set are ignored
-    (their mass never enters). Per-iteration cost identical to the
-    global loop."""
+    recommendation / expansion primitive. Same step and fixed-count
+    loop as :func:`pagerank_fixedpoint` (bit-exact cross-engine); only
+    the restart term differs: base_q(v) = ((100-d)·scale) DIV
+    (100·n_seeds) for seed nodes, 0 elsewhere, and the walk starts from
+    the seed distribution (scale DIV n_seeds on seeds, 0 elsewhere).
+    Seeding every node therefore IS the global walk. Seeds outside the
+    node set are ignored (their mass never enters)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    annotated, nodes, n = _pagerank_setup(edges)
-    seed_nodes = nodes.join(
-        seeds.select(F.col("node")).distinct(), "node", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_seeds = seed_nodes.count()
-    if n == 0 or n_seeds == 0:
-        return nodes.withColumn("rank_q", F.lit(0).cast("long"))
-    base_q = ((100 - damping_pct) * scale) // (100 * n_seeds)
-    init_q = scale // n_seeds
-    seeded = seed_nodes.withColumn("is_seed", F.lit(True))
-    annot_nodes = nodes.join(seeded, "node", "left").select(
-        "node", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
-    ).localCheckpoint(eager=True)
-    ranks = annot_nodes.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(init_q))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank_q"),
+    annotated, nodes, _ = _pagerank_setup(edges)
+    seed_set = seeds.select("node").distinct().withColumn("is_seed", F.lit(True))
+    flagged = (
+        nodes.join(seed_set, "node", "left")
+        .select("node", F.coalesce("is_seed", F.lit(False)).alias("is_seed"))
+        .localCheckpoint(eager=True)
     )
-    for _ in range(iters):
-        contrib = annotated.join(ranks, annotated.src == ranks.node).select(
-            F.col("dst").alias("node"),
-            F.expr("rank_q DIV outdeg").alias("c"),
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            annot_nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(F.col("is_seed"), F.lit(base_q)).otherwise(F.lit(0))
-                    + F.expr(f"({damping_pct} * coalesce(s, 0)) DIV 100")
-                )
-                .cast("long")
-                .alias("rank_q"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    release_checkpoint(nodes)
+    n_seeds = flagged.where("is_seed").count()
+    if n_seeds == 0:
+        return flagged.select("node", F.lit(0).cast("long").alias("rank_q"))
+    ranks = flagged.withColumn(
+        "rank_q",
+        F.when(F.col("is_seed"), F.lit(scale // n_seeds))
+        .otherwise(F.lit(0))
+        .cast("long"),
+    )
+    restart = F.when(
+        F.col("is_seed"), F.lit(((100 - damping_pct) * scale) // (100 * n_seeds))
+    ).otherwise(F.lit(0))
+    walk = _pagerank_walk(annotated, ranks, restart, iters, damping_pct)
+    return walk[-1].select("node", "rank_q")
 
 
 KCORE_K = 3
@@ -449,13 +425,7 @@ def kcore_nodes(
         raise ValueError(f"k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    sym = symmetric_edges(edges).localCheckpoint(eager=True)
     live = sym.select("src").distinct().localCheckpoint(eager=True)
 
     def _peel(cur: DataFrame) -> DataFrame:
@@ -517,10 +487,8 @@ def neighbor_jaccard_pairs(
     is exactly the uncapped form — equality test-pinned.
     hround(6) on the single final ratio (integer numerator and
     denominator, no accumulated-float risk)."""
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    sym = symmetric_edges(edges)
+    deg = node_degrees(sym)
     wedge_src = sym
     if wedge_cap is not None:
         if wedge_cap < 1:
@@ -565,10 +533,7 @@ def wedge_overflow(edges: DataFrame, wedge_cap: int = WEDGE_CAP) -> DataFrame:
     agg + one filter — no join at all."""
     if wedge_cap < 1:
         raise ValueError(f"wedge_cap must be >= 1, got {wedge_cap}")
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    deg = node_degrees(symmetric_edges(edges))
     return deg.where(F.col("deg") > wedge_cap).select(
         F.col("src").alias("node"),
         "deg",
@@ -590,8 +555,9 @@ def pagerank_l1_trajectory(
     the cross-engine comparison is exact). A healthy damped walk
     contracts geometrically (factor ≈ damping); a regression in the
     update rule — wrong degree join, dropped base term, oscillation —
-    shows up as a non-shrinking tail. Same per-iteration cost as the
-    rank loop plus one tiny join + agg per step."""
+    shows up as a non-shrinking tail. The iterates are
+    :func:`pagerank_fixedpoint`'s (:func:`_pagerank_walk`); each delta
+    is one 1-row agg over an iterate's own ``prev_q`` and ``rank_q``."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     annotated, nodes, n = _pagerank_setup(edges)
@@ -600,19 +566,18 @@ def pagerank_l1_trajectory(
             [], "iter long, l1_delta_q long"
         )
     ranks = nodes.withColumn("rank_q", F.lit(scale // n).cast("long"))
-    out = None
-    for i in range(1, iters + 1):
-        # fused iterate (r12): prev_q rides in the checkpointed frame,
-        # so the per-iteration L1 delta is a plain agg — the old
-        # ranks ⨝ nxt re-pair join (one node-sized shuffle per round)
-        # is gone; see _pagerank_step_delta
-        nxt = _pagerank_step_delta(annotated, ranks, n, damping_pct, scale)
-        delta = nxt.agg(
-            F.lit(i).cast("long").alias("iter"),
-            F.sum(F.abs(F.col("rank_q") - F.col("prev_q")))
-            .cast("long")
-            .alias("l1_delta_q"),
-        )
-        out = delta if out is None else out.unionByName(delta)
-        ranks = nxt.select("node", "rank_q")
-    return out
+    restart = F.lit(((100 - damping_pct) * scale) // (100 * n))
+    walk = _pagerank_walk(annotated, ranks, restart, iters, damping_pct)
+    # each iterate carries prev_q, so every delta is a plain agg
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        (
+            it.agg(
+                F.lit(i).cast("long").alias("iter"),
+                F.sum(F.abs(F.col("rank_q") - F.col("prev_q")))
+                .cast("long")
+                .alias("l1_delta_q"),
+            )
+            for i, it in enumerate(walk, start=1)
+        ),
+    )

@@ -797,7 +797,7 @@ def bpe_train(
     spark = docs.sparkSession
     words = (
         docs.select(
-            F.explode(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)).alias(
+            F.explode(tokens_col(F.lower(F.col(text_col)))).alias(
                 "w"
             )
         )
@@ -882,7 +882,7 @@ def bpe_train_fast(
     # compute things you throw away"; blocks are freed after the collect
     words = (
         docs.select(
-            F.explode(F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)).alias(
+            F.explode(tokens_col(F.lower(F.col(text_col)))).alias(
                 "w"
             )
         )
@@ -991,7 +991,7 @@ def bpe_apply(
             (r["pair"], r["merged"])
             for r in bpe_train(docs, text_col, merges=n_merges).collect()
         ]
-    words = F.split(F.trim(F.lower(F.col(text_col))), TOKEN_SPLIT_RE)
+    words = tokens_col(F.lower(F.col(text_col)))
     seg = F.array_join(
         F.transform(
             words,

@@ -1216,31 +1216,46 @@ def graph_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("node")
 
 
-def _graph_pagerank_oracle() -> str:
+def _pagerank_oracle_chain(levels: int, seed_bound: int | None = None) -> str:
+    """``WITH edges, sym, deg, nodes, basec, rk0 .. rk{levels}``: the
+    unrolled iterates of operators/graph.py::_pagerank_step_delta that
+    every PageRank oracle selects from.  With ``seed_bound`` the walk
+    is personalized: nodes below the bound are the seeds, and the
+    restart term and the initial ranks live on them only."""
     from pos_pipeline_core_etl_spark.operators.graph import (
         PAGERANK_DAMPING_PCT,
-        PAGERANK_ITERS,
         PAGERANK_SCALE,
     )
 
     d = PAGERANK_DAMPING_PCT
+    if seed_bound is None:
+        flag, n_restart, restart = "", "count(*)", "bc.b"
+        rk0 = "SELECT node, r_init AS rank_q FROM nodes, basec"
+    else:
+        flag = f", src < {seed_bound} AS is_seed"
+        n_restart = "count(*) FILTER (is_seed)"
+        restart = "(CASE WHEN n.is_seed THEN bc.b ELSE 0 END)"
+        rk0 = """
+  SELECT node, CASE WHEN is_seed THEN r_init ELSE 0 END AS rank_q
+  FROM nodes, basec
+"""
     ctes = [
         f"""sym AS MATERIALIZED (SELECT src, dst FROM edges
        UNION ALL SELECT dst, src FROM edges),
 deg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM sym GROUP BY src),
-nodes AS MATERIALIZED (SELECT src AS node FROM deg),
+nodes AS MATERIALIZED (SELECT src AS node{flag} FROM deg),
 basec AS MATERIALIZED (
-  SELECT (({100 - d}) * CAST({PAGERANK_SCALE} AS BIGINT)) // (100 * count(*))
-           AS b,
-         CAST({PAGERANK_SCALE} AS BIGINT) // count(*) AS r_init
+  SELECT (({100 - d}) * CAST({PAGERANK_SCALE} AS BIGINT))
+           // (100 * {n_restart}) AS b,
+         CAST({PAGERANK_SCALE} AS BIGINT) // {n_restart} AS r_init
   FROM nodes
 ),
-rk0 AS MATERIALIZED (SELECT node, r_init AS rank_q FROM nodes, basec)"""
+rk0 AS MATERIALIZED ({rk0})"""
     ]
-    for i in range(1, PAGERANK_ITERS + 1):
+    for i in range(1, levels + 1):
         ctes.append(
             f"""rk{i} AS MATERIALIZED (
-  SELECT n.node, bc.b + ({d} * COALESCE(s.s, 0)) // 100 AS rank_q
+  SELECT n.node, {restart} + ({d} * COALESCE(s.s, 0)) // 100 AS rank_q
   FROM nodes n CROSS JOIN basec bc
   LEFT JOIN (
     SELECT e.dst AS node, SUM(r.rank_q // dg.outdeg) AS s
@@ -1252,9 +1267,14 @@ rk0 AS MATERIALIZED (SELECT node, r_init AS rank_q FROM nodes, basec)"""
 )"""
         )
     chain = ",\n".join(ctes)
+    return f"WITH {_GRAPH_EDGES_SQL},\n{chain}"
+
+
+def _graph_pagerank_oracle(seed_bound: int | None = None) -> str:
+    from pos_pipeline_core_etl_spark.operators.graph import PAGERANK_ITERS
+
     return f"""
-WITH {_GRAPH_EDGES_SQL},
-{chain}
+{_pagerank_oracle_chain(PAGERANK_ITERS, seed_bound)}
 SELECT CAST(node AS BIGINT) AS node, CAST(rank_q AS BIGINT) AS rank_q
 FROM rk{PAGERANK_ITERS} ORDER BY node
 """
@@ -1289,41 +1309,12 @@ def graph_part_pagerank_tol(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _graph_pagerank_tol_oracle() -> str:
     from pos_pipeline_core_etl_spark.operators.graph import (
-        PAGERANK_DAMPING_PCT,
         PAGERANK_MAX_ITERS,
-        PAGERANK_SCALE,
         PAGERANK_TOL_Q,
     )
 
-    d = PAGERANK_DAMPING_PCT
     cap = PAGERANK_MAX_ITERS
-    ctes = [
-        f"""sym AS MATERIALIZED (SELECT src, dst FROM edges
-       UNION ALL SELECT dst, src FROM edges),
-deg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM sym GROUP BY src),
-nodes AS MATERIALIZED (SELECT src AS node FROM deg),
-basec AS MATERIALIZED (
-  SELECT (({100 - d}) * CAST({PAGERANK_SCALE} AS BIGINT)) // (100 * count(*))
-           AS b,
-         CAST({PAGERANK_SCALE} AS BIGINT) // count(*) AS r_init
-  FROM nodes
-),
-rk0 AS MATERIALIZED (SELECT node, r_init AS rank_q FROM nodes, basec)"""
-    ]
-    for i in range(1, cap + 1):
-        ctes.append(
-            f"""rk{i} AS MATERIALIZED (
-  SELECT n.node, bc.b + ({d} * COALESCE(s.s, 0)) // 100 AS rank_q
-  FROM nodes n CROSS JOIN basec bc
-  LEFT JOIN (
-    SELECT e.dst AS node, SUM(r.rank_q // dg.outdeg) AS s
-    FROM sym e
-    JOIN rk{i - 1} r ON r.node = e.src
-    JOIN deg dg ON dg.src = e.src
-    GROUP BY e.dst
-  ) s ON s.node = n.node
-)"""
-        )
+    ctes = [_pagerank_oracle_chain(cap)]
     deltas = "\nUNION ALL\n".join(
         f"""SELECT {i} AS iter, SUM(ABS(a.rank_q - b.rank_q)) AS d
 FROM rk{i} a JOIN rk{i - 1} b ON b.node = a.node"""
@@ -1341,7 +1332,6 @@ FROM rk{i} a JOIN rk{i - 1} b ON b.node = a.node"""
     ctes.append(f"levels AS MATERIALIZED (\n{levels}\n)")
     chain = ",\n".join(ctes)
     return f"""
-WITH {_GRAPH_EDGES_SQL},
 {chain}
 SELECT CAST(l.node AS BIGINT) AS node,
        CAST(l.rank_q AS BIGINT) AS rank_q,
@@ -1371,10 +1361,7 @@ def graph_part_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pos_pipeline_core_etl_spark.operators import graph
 
     edges = _graph_edges(spark, sf_dir)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    deg = graph.node_degrees(graph.symmetric_edges(edges))
     tris = graph.triangle_counts_oriented(edges).withColumnRenamed("node", "src")
     wedges = (F.col("deg") * (F.col("deg") - 1) / 2).cast("long")
     return (
@@ -1578,60 +1565,9 @@ def graph_part_pagerank_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _graph_ppr_oracle() -> str:
-    from pos_pipeline_core_etl_spark.operators.graph import (
-        PAGERANK_DAMPING_PCT,
-        PAGERANK_ITERS,
-        PAGERANK_SCALE,
-    )
-
-    d = PAGERANK_DAMPING_PCT
-    sb = _PPR_SEED_BOUND
-    ctes = [
-        f"""sym AS MATERIALIZED (SELECT src, dst FROM edges
-       UNION ALL SELECT dst, src FROM edges),
-deg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM sym GROUP BY src),
-nodes AS MATERIALIZED (SELECT src AS node, src < {sb} AS is_seed FROM deg),
-basec AS MATERIALIZED (
-  SELECT (({100 - d}) * CAST({PAGERANK_SCALE} AS BIGINT))
-           // (100 * count(*) FILTER (is_seed)) AS b,
-         CAST({PAGERANK_SCALE} AS BIGINT) // count(*) FILTER (is_seed)
-           AS r_init
-  FROM nodes
-),
-rk0 AS MATERIALIZED (
-  SELECT node, CASE WHEN is_seed THEN r_init ELSE 0 END AS rank_q
-  FROM nodes, basec
-)"""
-    ]
-    for i in range(1, PAGERANK_ITERS + 1):
-        ctes.append(
-            f"""rk{i} AS MATERIALIZED (
-  SELECT n.node,
-         (CASE WHEN n.is_seed THEN bc.b ELSE 0 END)
-           + ({d} * COALESCE(s.s, 0)) // 100 AS rank_q
-  FROM nodes n CROSS JOIN basec bc
-  LEFT JOIN (
-    SELECT e.dst AS node, SUM(r.rank_q // dg.outdeg) AS s
-    FROM sym e
-    JOIN rk{i - 1} r ON r.node = e.src
-    JOIN deg dg ON dg.src = e.src
-    GROUP BY e.dst
-  ) s ON s.node = n.node
-)"""
-        )
-    chain = ",\n".join(ctes)
-    return f"""
-WITH {_GRAPH_EDGES_SQL},
-{chain}
-SELECT CAST(node AS BIGINT) AS node, CAST(rank_q AS BIGINT) AS rank_q
-FROM rk{PAGERANK_ITERS} ORDER BY node
-"""
-
-
 QUERIES["graph_part_pagerank_seeded"] = (
     graph_part_pagerank_seeded,
-    _graph_ppr_oracle(),
+    _graph_pagerank_oracle(_PPR_SEED_BOUND),
 )
 
 
@@ -1944,17 +1880,14 @@ def graph_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _graph_convergence_oracle() -> str:
     from pos_pipeline_core_etl_spark.operators.graph import PAGERANK_ITERS
 
-    pr = _graph_pagerank_oracle()
-    # reuse the unrolled rk0..rkN chain from the pagerank oracle: strip
-    # its final SELECT and aggregate successive deltas instead
-    chain = pr[: pr.rindex("SELECT CAST(node AS BIGINT)")]
     legs = "\nUNION ALL\n".join(
         f"""SELECT CAST({i} AS BIGINT) AS iter,
        CAST(sum(abs(a.rank_q - b.rank_q)) AS BIGINT) AS l1_delta_q
 FROM rk{i} a JOIN rk{i - 1} b ON b.node = a.node"""
         for i in range(1, PAGERANK_ITERS + 1)
     )
-    return f"""{chain}{legs}
+    return f"""{_pagerank_oracle_chain(PAGERANK_ITERS)}
+{legs}
 ORDER BY iter
 """
 

@@ -2230,7 +2230,7 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     retraining. Two keyed aggs + one source-level join; everything
     else is map-side."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
+    toks = F.size(text.tokens_col(F.col("text"))).cast("long")
     old = (
         docs.where(F.col("doc_id") % 10 != 7)
         .groupBy("source")
