@@ -13,7 +13,7 @@ resolved (connected components live in operators/dedup.py):
   PageRank: ranks are integer nano-units (scale 1e9), per-node
   contributions are floor divisions, and sums are exact integer sums —
   order-free, bit-exact in both engines, the kmeans integer-quantization
-  determinism contract (operators/similarity.py::_kmeans_assignments)
+  determinism contract (operators/similarity.py::_lloyd)
   applied to graph iteration. The fixed-point values sit within
   iters × (1/scale + degree rounding) of true float PageRank; what the
   engine guarantees is that BOTH engines compute the SAME number.

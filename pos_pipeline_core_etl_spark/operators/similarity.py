@@ -891,7 +891,15 @@ def _kmeans_assignments(
     with_centroids: bool = False,
     with_vec: bool = False,
 ) -> DataFrame:
-    """Fully-distributed Lloyd k-means: every step is a DataFrame op.
+    """Fully-distributed Lloyd k-means over the ENTIRE corpus with zero
+    driver collection: the input prep for :func:`_lloyd` with no group
+    keys (one packed centroid row, cross-joined as a broadcast).  Unlike
+    :func:`ivf_centroids` (numpy Lloyd on a BOUNDED driver-side sample —
+    the coarse-quantizer path), this is the shape a 100 TB run needs.
+
+    Seeds are the k lowest-id vectors; the seed's vec_id IS the cluster
+    label (labels need only be distinct + ordered for the tie-break;
+    avoids a row_number over an unpartitioned window).
 
     ``with_vec=True`` additionally carries the ORIGINAL (double) vector
     through to the returned assignment as ``vec`` — free, because the
@@ -900,135 +908,168 @@ def _kmeans_assignments(
     need vector + cluster (semdedup's within-cluster cosine) skip the
     embeddings ⨝ assignments re-attach join entirely (guide §2.4).
 
-    Unlike :func:`ivf_centroids` (numpy Lloyd on a BOUNDED driver-side
-    sample — the coarse-quantizer path), this trains on the ENTIRE
-    corpus with zero driver collection, the shape a 100 TB run needs:
-
-    - init: the k lowest-id vectors are the seed centroids (broadcast);
-    - assign: centroids are packed into ONE array row and broadcast, so
-      assignment is a pure map-side fold per vector — no shuffle, no
-      N × k join;
-    - update: posexplode to (cluster, component, value) and one keyed
-      hash-agg per iteration — the only data-sized shuffle, with
-      map-side partials; k*dim result rows.
-
-    Determinism contract: vectors are quantized to integers once, so
-    centroid numerators are exact integer sums (order-free) and every
-    distance is computed from identical rationals in both engines —
-    assignments are bit-exact cross-engine, ties broken by lowest
-    cluster id. Empty clusters keep their previous centroid.
-    """
-    if iters < 1:
-        # iters=0 would fall through the loop with assigned=None and
-        # crash downstream in a confusing select (ADVICE r4)
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    carry = (
-        [_as_double(F.col(vec_col)).alias("vec")] if with_vec else []
-    )
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        _quantize_vec(F.col(vec_col), quant).alias("vq"),
-        *carry,
-    )
-    qf = float(quant)
-
-    # seed centroids: the k lowest-id vectors. The seed's vec_id IS the
-    # cluster label (labels need only be distinct + ordered for the
-    # tie-break; avoids a row_number over an unpartitioned window).
+    ``with_centroids=True`` also returns the centroids the FINAL
+    assignment was computed against — what an IVF index stores
+    alongside its lists."""
+    base = _quantized_base(embeddings, id_col, vec_col, quant, with_vec)
     seeds = (
         base.orderBy("vec_id")
         .limit(k)
         .select(
             F.col("vec_id").alias("cluster"),
-            F.transform(F.col("vq"), lambda x: x / F.lit(qf)).alias("centroid"),
+            F.transform(F.col("vq"), lambda x: x / F.lit(float(quant))).alias(
+                "centroid"
+            ),
+        )
+    )
+    carry = ("vec",) if with_vec else ()
+    assigned, cents = _lloyd(base, seeds, (), iters, quant, carry)
+    return (assigned, cents) if with_centroids else assigned
+
+
+def _quantized_base(
+    embeddings: DataFrame,
+    id_col: str,
+    vec_col: str,
+    quant: int,
+    with_vec: bool = False,
+) -> DataFrame:
+    """(vec_id, vq[, vec]): the integer-quantized vectors k-means trains
+    and assigns on, optionally with the original double vector."""
+    carry = [_as_double(F.col(vec_col)).alias("vec")] if with_vec else []
+    return embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        _quantize_vec(F.col(vec_col), quant).alias("vq"),
+        *carry,
+    )
+
+
+def _lloyd(
+    base: DataFrame,
+    seeds: DataFrame,
+    keys: tuple[str, ...],
+    iters: int,
+    quant: int,
+    carry: tuple[str, ...] = (),
+    ckpt=lambda df: df,
+) -> tuple[DataFrame, DataFrame]:
+    """The one Lloyd trainer behind k-means and product quantization.
+
+    ``base`` holds (vec_id, *keys, vq, *carry) with ``vq`` an array of
+    quantized integers; ``seeds`` holds (*keys, cluster, centroid).  The
+    group ``keys`` train one codebook per key value in the same plan:
+    ``()`` is k-means, ``("sub",)`` is PQ (one codebook per subspace —
+    k-means is PQ with one subspace).  Per iteration:
+
+    - pack: the centroids of each key go into ONE sorted array row
+      (:func:`_pack`), broadcast to every vector — a cross join for
+      ``()``, an equi-join on the keys otherwise; no N × k join;
+    - assign: a map-side argmin over that array (:func:`_assign`);
+    - update: posexplode to (keys, cluster, component, value) and one
+      keyed hash-agg — the only data-sized shuffle, with map-side
+      partials; k·dim rows per key (:func:`_update`).
+
+    ``ckpt`` is applied to the centroids each assignment reads (PQ's
+    ``reuse`` passes a lazy localCheckpoint; identity otherwise).
+    Returns ``(assigned, centroids)``: the final assignment (vec_id,
+    *keys, vq, *carry, cluster, d2) and the centroids that PRODUCED it
+    — the post-loop update is never seen by any assignment.
+
+    Determinism contract: vectors are quantized to integers once, so
+    centroid numerators are exact integer sums (order-free) and every
+    distance is computed from identical rationals in both engines —
+    assignments are bit-exact cross-engine, ties broken by lowest
+    cluster id.  Empty clusters keep their previous centroid."""
+    if iters < 1:
+        # iters=0 would fall through the loop with assigned=None and
+        # crash downstream in a confusing select (ADVICE r4)
+        raise ValueError(f"iters must be >= 1, got {iters}")
+    centroids = seeds
+    for _ in range(iters):
+        at_assign = ckpt(centroids)
+        assigned = _assign(base, _pack(at_assign, keys), keys, quant, carry)
+        centroids = _update(assigned, at_assign, keys, quant)
+    return assigned, at_assign
+
+
+def _pack(centroids: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """k rows per key -> ONE row per key holding the sorted centroids."""
+    return centroids.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct("cluster", "centroid"))).alias(
+            "cents"
         )
     )
 
-    def pack(centroids: DataFrame) -> DataFrame:
-        """k rows -> ONE row holding the sorted centroid array."""
-        return centroids.groupBy().agg(
-            F.array_sort(
-                F.collect_list(F.struct("cluster", "centroid"))
-            ).alias("cents")
-        )
 
-    def assign(packed: DataFrame) -> DataFrame:
-        """Map-side argmin over the broadcast centroid array.
+def _assign(
+    base: DataFrame,
+    packed: DataFrame,
+    keys: tuple[str, ...],
+    quant: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Map-side argmin of every ``vq`` over its key's broadcast
+    centroid array; adds ``cluster`` and its squared distance ``d2``.
 
-        r12 (guide §1.2 per-task work + §7.3 driver planning): ONE
-        ``F.expr`` — ``array_min`` over per-centroid (d2, cluster)
-        structs — instead of a Column-API fold whose when-branch
-        duplicated the d2 subtree and whose ``best["cluster"]`` /
-        ``best["d2"]`` extractions each re-evaluated the whole fold.
-        d2 is now computed once per centroid and the struct once per
-        row (extractions read a materialized attribute in a separate
-        projection).  array_min's lexicographic struct ordering ==
-        the fold's strict-< with sorted cents: lowest d2, ties to the
-        lowest cluster id — bit-identical assignments (oracle-checked).
-        The SQL string also collapses ~2.6 s of per-call py4j lambda
-        construction into one parse (the dedup.py F.expr precedent)."""
+    r12 (guide §1.2 per-task work + §7.3 driver planning): ONE
+    ``F.expr`` — ``array_min`` over per-centroid (d2, cluster) structs —
+    instead of a Column-API fold whose when-branch duplicated the d2
+    subtree and whose ``best["cluster"]`` / ``best["d2"]`` extractions
+    each re-evaluated the whole fold.  d2 is computed once per centroid
+    and the struct once per row (the extractions read a materialized
+    attribute in a separate projection).  array_min's lexicographic
+    struct ordering == a strict-< fold over sorted cents: lowest d2,
+    ties to the lowest cluster id.  The SQL string also collapses ~2.6 s
+    of per-call py4j lambda construction into one parse (the dedup.py
+    F.expr precedent)."""
+    if keys:
+        joined = base.join(F.broadcast(packed), list(keys))
+    else:
         joined = base.crossJoin(F.broadcast(packed))
-        best = F.expr(
-            f"array_min(transform(cents, c -> named_struct("
-            f"'d2', aggregate(zip_with(transform(vq, x -> x / {qf}D),"
-            f" c.centroid, (x, y) -> (x - y) * (x - y)),"
-            f" 0.0D, (s, d) -> s + d),"
-            f"'cluster', c.cluster)))"
-        )
-        staged = joined.select(
-            "vec_id",
-            "vq",
-            *(["vec"] if with_vec else []),
-            best.alias("best"),
-        )
-        return staged.select(
-            "vec_id",
-            "vq",
-            *(["vec"] if with_vec else []),
-            F.col("best.cluster").alias("cluster"),
-            F.col("best.d2").alias("d2"),
-        )
+    qf = float(quant)
+    best = F.expr(
+        f"array_min(transform(cents, c -> named_struct("
+        f"'d2', aggregate(zip_with(transform(vq, x -> x / {qf}D),"
+        f" c.centroid, (x, y) -> (x - y) * (x - y)),"
+        f" 0.0D, (s, d) -> s + d),"
+        f"'cluster', c.cluster)))"
+    )
+    cols = ["vec_id", *keys, "vq", *carry]
+    staged = joined.select(*cols, best.alias("best"))
+    return staged.select(
+        *cols,
+        F.col("best.cluster").alias("cluster"),
+        F.col("best.d2").alias("d2"),
+    )
 
-    def update(assigned: DataFrame, prev: DataFrame) -> DataFrame:
-        """Exact integer component sums -> new centroids; empty clusters
-        inherit the previous centroid."""
-        comp = assigned.select(
-            "cluster", F.posexplode(F.col("vq")).alias("comp", "val")
-        )
-        sums = comp.groupBy("cluster", "comp").agg(
-            F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        fresh = (
-            sums.withColumn("mean", F.col("s") / (F.col("n") * F.lit(qf)))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("comp", "mean"))),
-                    lambda st: st["mean"],
-                ).alias("centroid")
-            )
-        )
-        return (
-            prev.select("cluster", F.col("centroid").alias("prev_centroid"))
-            .join(fresh, "cluster", "left")
-            .select(
-                "cluster",
-                F.coalesce("centroid", "prev_centroid").alias("centroid"),
-            )
-        )
 
-    centroids = seeds
-    assigned = None
-    for _ in range(iters):
-        last_centroids = centroids
-        assigned = assign(pack(centroids))
-        centroids = update(assigned, centroids)
-    if with_centroids:
-        # the centroids the FINAL assignment was computed against —
-        # what an IVF index stores alongside its lists (the post-loop
-        # update is never seen by any assignment)
-        return assigned, last_centroids
-    return assigned
+def _update(
+    assigned: DataFrame,
+    prev: DataFrame,
+    keys: tuple[str, ...],
+    quant: int,
+) -> DataFrame:
+    """Exact integer component sums -> new centroids; empty clusters
+    inherit the previous centroid."""
+    grp = [*keys, "cluster"]
+    comp = assigned.select(*grp, F.posexplode(F.col("vq")).alias("comp", "val"))
+    fresh = (
+        comp.groupBy(*grp, "comp")
+        .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
+        .withColumn("mean", F.col("s") / (F.col("n") * F.lit(float(quant))))
+        .groupBy(*grp)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("comp", "mean"))),
+                lambda st: st["mean"],
+            ).alias("centroid")
+        )
+    )
+    return (
+        prev.select(*grp, F.col("centroid").alias("prev_centroid"))
+        .join(fresh, grp, "left")
+        .select(*grp, F.coalesce("centroid", "prev_centroid").alias("centroid"))
+    )
 
 
 def assign_to_centroids(
@@ -1039,34 +1080,14 @@ def assign_to_centroids(
     quant: int = KMEANS_QUANT,
 ) -> DataFrame:
     """Assign vectors to GIVEN centroids (no training): the serving /
-    monitoring half of :func:`_kmeans_assignments` — score a NEW
-    snapshot against centroids trained on an old one (embedding-drift
-    monitoring), or route fresh vectors into an existing index. Same
-    map-side broadcast-fold assignment and same determinism contract
-    (quantized integers, strict-< fold so ties go to the lowest
-    cluster id); zero shuffles."""
-    base = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        _quantize_vec(F.col(vec_col), quant).alias("vq"),
-    )
-    qf = float(quant)
-    packed = centroids.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("cluster", "centroid"))).alias(
-            "cents"
-        )
-    )
-    joined = base.crossJoin(F.broadcast(packed))
-    # same single-expr argmin as _kmeans_assignments.assign (r12):
-    # array_min over per-centroid structs — d2 once per centroid,
-    # lexicographic tie-break to the lowest cluster id, bit-identical
-    best = F.expr(
-        f"array_min(transform(cents, c -> named_struct("
-        f"'d2', aggregate(zip_with(transform(vq, x -> x / {qf}D),"
-        f" c.centroid, (x, y) -> (x - y) * (x - y)),"
-        f" 0.0D, (s, d) -> s + d),"
-        f"'cluster', c.cluster)))"
-    )
-    return joined.select("vec_id", best["cluster"].alias("cluster"))
+    monitoring half of :func:`_lloyd` — score a NEW snapshot against
+    centroids trained on an old one (embedding-drift monitoring), or
+    route fresh vectors into an existing index.  The trainer's own pack
+    + assign, so the same determinism contract holds (quantized
+    integers, ties to the lowest cluster id); zero shuffles."""
+    base = _quantized_base(embeddings, id_col, vec_col, quant)
+    assigned = _assign(base, _pack(centroids, ()), (), quant)
+    return assigned.select("vec_id", "cluster")
 
 
 # ---------------------------------------------------------------------------
@@ -1103,15 +1124,14 @@ def pq_encode(
     ``m * log2(k)`` bits while supporting asymmetric distance search —
     the memory layer under billion-scale ANN (IVF-PQ).
 
-    Scale shape mirrors :func:`_kmeans_assignments`, with the subspace
-    id joining the centroid broadcast instead of a cross join: slicing
-    is map-side (one explode → m subvector rows per vector), each Lloyd
+    Trained by :func:`_lloyd` keyed by ``sub``: the subspace id joins
+    the centroid broadcast instead of a cross join, slicing is map-side
+    (one explode → m subvector rows per vector), and each Lloyd
     iteration is ONE keyed hash-agg on (sub, cluster, component) for
     all ``m`` codebooks simultaneously — codebooks don't train
-    sequentially, the shuffle count is independent of ``m``. Same
-    integer-quantization determinism contract as k-means: exact
-    integer centroid sums, ties to the lowest cluster id, bit-exact
-    cross-engine.
+    sequentially, the shuffle count is independent of ``m``.  With
+    ``m=1`` this is :func:`kmeans_lloyd`.  Same integer-quantization
+    determinism contract: bit-exact cross-engine.
     """
     _base, assigned, _cents = _pq_fit(
         embeddings, m, k, iters, id_col, vec_col, quant, dim
@@ -1132,21 +1152,20 @@ def _pq_fit(
     dim: int = 64,
     reuse: bool = False,
 ):
-    """PQ training internals: returns ``(base, assigned, centroids)``
-    where base = (vec_id, sub, svq quantized subvectors), assigned =
-    the final per-subspace assignment, centroids = the codebooks that
-    PRODUCED that assignment (what ADC search must look distances up
-    against).
+    """PQ training internals, the input prep for :func:`_lloyd` keyed
+    by ``sub``: returns ``(base, assigned, centroids)`` where base =
+    (vec_id, sub, vq quantized subvectors), assigned = the final
+    per-subspace assignment (with each subvector's ``d2`` to its
+    codeword), centroids = the codebooks that PRODUCED that assignment
+    (what ADC search must look distances up against).
 
     ``reuse=True`` lazily localCheckpoints base / per-iteration
     centroids / the final assignment — for callers that fan the
-    returned frames into several consumers (ADC tables, SSE joins,
-    IVF-PQ's residual pipeline), where plan re-execution otherwise
+    returned frames into several consumers (ADC tables, IVF-PQ's
+    residual pipeline), where plan re-execution otherwise
     multiplies the training cost (measured 6× on IVF-PQ at sf0.1).
     Single-consumer encoding leaves it off: materialization costs more
     than the one extra lazy pass."""
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     sub_d = dim // m
@@ -1157,7 +1176,7 @@ def _pq_fit(
         *[
             F.struct(
                 F.lit(s).alias("sub"),
-                F.slice(vq, s * sub_d + 1, sub_d).alias("svq"),
+                F.slice(vq, s * sub_d + 1, sub_d).alias("vq"),
             )
             for s in range(m)
         ]
@@ -1166,7 +1185,7 @@ def _pq_fit(
     base = ckpt(
         embeddings.select(
             F.col(id_col).alias("vec_id"), F.explode(subs).alias("x")
-        ).select("vec_id", F.col("x.sub").alias("sub"), F.col("x.svq").alias("svq"))
+        ).select("vec_id", F.col("x.sub").alias("sub"), F.col("x.vq").alias("vq"))
     )
 
     # seed codebooks: the k lowest-id vectors' subvectors (TakeOrdered +
@@ -1175,66 +1194,13 @@ def _pq_fit(
     seeds = base.join(F.broadcast(seed_ids), "vec_id").select(
         "sub",
         F.col("vec_id").alias("cluster"),
-        F.transform(F.col("svq"), lambda x: x / F.lit(qf)).alias("centroid"),
+        F.transform(F.col("vq"), lambda x: x / F.lit(qf)).alias("centroid"),
     )
-
-    def pack(centroids: DataFrame) -> DataFrame:
-        """m rows, one per subspace, each holding its sorted codebook."""
-        return centroids.groupBy("sub").agg(
-            F.array_sort(F.collect_list(F.struct("cluster", "centroid"))).alias(
-                "cents"
-            )
-        )
-
-    def assign(packed: DataFrame) -> DataFrame:
-        # same single-expr argmin as _kmeans_assignments.assign (r12):
-        # d2 once per codeword, ties to the lowest code id, bit-identical
-        joined = base.join(F.broadcast(packed), "sub")
-        best = F.expr(
-            f"array_min(transform(cents, c -> named_struct("
-            f"'d2', aggregate(zip_with(transform(svq, x -> x / {qf}D),"
-            f" c.centroid, (x, y) -> (x - y) * (x - y)),"
-            f" 0.0D, (s, d) -> s + d),"
-            f"'cluster', c.cluster)))"
-        )
-        return joined.select("vec_id", "sub", "svq", best["cluster"].alias("cluster"))
-
-    def update(assigned: DataFrame, prev: DataFrame) -> DataFrame:
-        comp = assigned.select(
-            "sub", "cluster", F.posexplode(F.col("svq")).alias("comp", "val")
-        )
-        fresh = (
-            comp.groupBy("sub", "cluster", "comp")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn("mean", F.col("s") / (F.col("n") * F.lit(qf)))
-            .groupBy("sub", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("comp", "mean"))),
-                    lambda st: st["mean"],
-                ).alias("centroid")
-            )
-        )
-        return (
-            prev.select("sub", "cluster", F.col("centroid").alias("prev_centroid"))
-            .join(fresh, ["sub", "cluster"], "left")
-            .select(
-                "sub",
-                "cluster",
-                F.coalesce("centroid", "prev_centroid").alias("centroid"),
-            )
-        )
-
-    centroids = seeds
-    assigned = None
-    for _ in range(iters):
-        # under reuse, the m×k-row centroid checkpoint collapses the
-        # per-iteration plan nesting so consumers of (assigned,
-        # centroids) don't re-run the whole training chain per reference
-        at_assign = ckpt(centroids)
-        assigned = assign(pack(at_assign))
-        centroids = update(assigned, at_assign)
-    return base, ckpt(assigned), at_assign
+    # under reuse, the m×k-row centroid checkpoint collapses the
+    # per-iteration plan nesting so consumers of (assigned, centroids)
+    # don't re-run the whole training chain per reference
+    assigned, cents = _lloyd(base, seeds, ("sub",), iters, quant, ckpt=ckpt)
+    return base, ckpt(assigned), cents
 
 
 def pq_adc_topk(
@@ -1272,7 +1238,7 @@ def pq_adc_topk(
     qsubs = base.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         "sub",
-        F.transform(F.col("svq"), lambda x: x / F.lit(qf)).alias("qv"),
+        F.transform(F.col("vq"), lambda x: x / F.lit(qf)).alias("qv"),
     )
     pd2 = F.aggregate(
         F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
@@ -1324,26 +1290,15 @@ def pq_sse(
     """PQ training diagnostics: per-subspace vector count and
     reconstruction SSE (distance from each subvector to its assigned
     codeword) — the quantization-distortion number you watch when
-    choosing m and k. Same plan as the encoder plus one codebook join
-    and a tiny agg; SSE hround(4)-ed (per-row d2 is exact shared
-    arithmetic, only the cross-row sum can differ in the last bits —
-    kmeans_sse convention)."""
-    from pos_pipeline_core_etl_spark.functions.rounding import hround
-
-    _base, assigned, cents = _pq_fit(
+    choosing m and k. Same plan as the encoder plus one tiny agg over
+    the trainer's (sub, d2); SSE hround(4)-ed (per-row d2 is exact
+    shared arithmetic, only the cross-row sum can differ in the last
+    bits — kmeans_sse convention)."""
+    _base, assigned, _cents = _pq_fit(
         embeddings, m, k, iters, id_col, vec_col, quant, dim, reuse=True
     )
-    qf = float(quant)
-    v = F.transform(F.col("svq"), lambda x: x / F.lit(qf))
-    d2 = F.aggregate(
-        F.zip_with(v, F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda s, d: s + d,
-    )
     return (
-        assigned.join(F.broadcast(cents), ["sub", "cluster"])
-        .select("sub", d2.alias("d2"))
-        .groupBy("sub")
+        assigned.groupBy("sub")
         .agg(F.count(F.lit(1)).alias("n_vecs"), hround(F.sum("d2"), 4).alias("sse"))
         .select(F.col("sub").cast("int").alias("sub"), "n_vecs", "sse")
         .orderBy("sub")

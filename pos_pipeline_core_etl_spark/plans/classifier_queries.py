@@ -3,8 +3,8 @@ oracles (LLM-pipeline extension; the reference has no ML surface).
 
 The oracle unrolls the SAME gradient-descent iteration count /
 learning rate / quantization constants the Spark operator uses
-(``operators/classifier.py``), exactly like the k-means oracle
-(``llm_ops._kmeans_oracle``) — changing LR_ITERS cannot silently
+(``operators/classifier.py``), exactly like the k-means/PQ oracle
+chain (``llm_ops._lloyd_chain``) — changing LR_ITERS cannot silently
 desync engine and oracle. Every arithmetic fold is written in the
 identical left-associated order in both engines, and per-doc gradient
 contributions are integer-quantized before summing so the only

@@ -3963,65 +3963,129 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.kmeans_lloyd(emb).orderBy("vec_id")
 
 
-def _kmeans_oracle() -> str:
-    k = similarity.KMEANS_K
+def _sq_dist_sql(a: str, b: str, width: int) -> str:
+    """DuckDB squared L2 distance between the element expressions ``a``
+    and ``b`` of ``i`` over ``width`` components, left-folded in
+    component order like Spark's ``aggregate(zip_with(...))``."""
+    return (
+        f"list_reduce(list_transform(generate_series(1, {width}),"
+        f" i -> ({a} - {b}) * ({a} - {b})), (x, y) -> x + y)"
+    )
+
+
+def _vq_d2_sql(vq: str, width: int) -> str:
+    """Squared distance from the quantized vector ``vq`` (scaled back by
+    KMEANS_QUANT) to the centroid list ``s.centroid`` — the Spark
+    argmin's arithmetic term for term."""
     q = float(similarity.KMEANS_QUANT)
-    dim = 64
-    d2 = (
-        "list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (b.vq[i] / {q} - s.centroid[i]) * (b.vq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(dim=dim, q=q)
+    return _sq_dist_sql(f"{vq}[i] / {q}", "s.centroid[i]", width)
 
-    def assign(base: str, cents: str, out: str) -> str:
-        return f"""
-{out} AS (
-  SELECT vec_id, vq, cluster FROM (
-    SELECT b.vec_id, b.vq, s.cluster,
-           row_number() OVER (PARTITION BY b.vec_id ORDER BY {d2}, s.cluster) AS rn
-    FROM {base} b CROSS JOIN {cents} s)
-  WHERE rn = 1
-)"""
 
-    def update(assigned: str, prev: str, out: str) -> str:
-        return f"""
-{out}_sums AS (
-  SELECT cluster, u.i AS comp, sum(vq[u.i]) AS s, count(*) AS n
-  FROM {assigned}, unnest(generate_series(1, {dim})) AS u(i)
-  GROUP BY cluster, u.i
-),
-{out}_fresh AS (
-  SELECT cluster, list(s / (n * {q}) ORDER BY comp) AS centroid
-  FROM {out}_sums GROUP BY cluster
-),
-{out} AS (
-  SELECT p.cluster, coalesce(f.centroid, p.centroid) AS centroid
-  FROM {prev} p LEFT JOIN {out}_fresh f USING (cluster)
-)"""
-
-    # generate the assign/update CTE chain from the SAME iteration
-    # constant the Spark operator uses, so changing KMEANS_ITERS cannot
-    # silently desync engine and oracle (ADVICE r4)
-    iters = similarity.KMEANS_ITERS
-    chain, cents = [], "seeds"
-    for i in range(iters):
-        chain.append(assign("base", cents, f"assign{i}"))
-        if i < iters - 1:
-            chain.append(update(f"assign{i}", cents, f"cent{i + 1}"))
-            cents = f"cent{i + 1}"
-    return f"""
-WITH base AS (
+def _vq_base_sql(name: str, source: str = "embeddings") -> str:
+    """CTE ``name`` (vec_id, vq): the integer-quantized vectors of
+    ``source``, as operators/similarity.py::_quantized_base."""
+    q = float(similarity.KMEANS_QUANT)
+    return f"""{name} AS MATERIALIZED (
   SELECT vec_id,
          list_transform(CAST(embedding AS DOUBLE[]),
                         x -> CAST(floor(x * {q} + 0.5) AS BIGINT)) AS vq
-  FROM embeddings
+  FROM {source}
+)"""
+
+
+def _lloyd_assign_sql(
+    base: str,
+    cents: str,
+    out: str,
+    keys: tuple[str, ...] = (),
+    width: int = 64,
+    with_d2: bool = False,
+) -> str:
+    """CTE ``out``: every (vec_id, *keys) row of ``base`` with its
+    nearest centroid of ``cents`` (same keys), ties to the lowest
+    cluster id; ``with_d2`` keeps the squared distance."""
+    d2 = _vq_d2_sql("b.vq", width)
+    kc = "".join(f"{k}, " for k in keys)
+    kb = "".join(f"b.{k}, " for k in keys)
+    part = "".join(f", b.{k}" for k in keys)
+    on = " AND ".join(f"b.{k} = s.{k}" for k in keys)
+    src = f"{base} b JOIN {cents} s ON {on}" if keys else f"{base} b CROSS JOIN {cents} s"
+    dcol, dsel = (", d2", f", {d2} AS d2") if with_d2 else ("", "")
+    return f"""
+{out} AS (
+  SELECT vec_id, {kc}vq, cluster{dcol} FROM (
+    SELECT b.vec_id, {kb}b.vq, s.cluster{dsel},
+           row_number() OVER (PARTITION BY b.vec_id{part}
+                              ORDER BY {d2}, s.cluster) AS rn
+    FROM {src})
+  WHERE rn = 1
+)"""
+
+
+def _lloyd_chain(
+    prefix: str,
+    keys: tuple[str, ...] = (),
+    width: int = 64,
+    with_d2: bool = False,
+    k: int = similarity.KMEANS_K,
+    iters: int = similarity.KMEANS_ITERS,
+) -> tuple[str, str, str]:
+    """The one Lloyd CTE chain behind every k-means and PQ oracle — the
+    DuckDB twin of operators/similarity.py::_lloyd.  A CTE
+    ``{prefix}_base`` (vec_id, *keys, vq), ``width`` components per
+    row, must precede it; ``keys=()`` is k-means, ``("sub",)`` is PQ.
+    Emits the seeds (the k lowest ids), then per iteration an assign
+    and, before the last one, an update.  Returns ``(ctes,
+    last_assign, last_centroids)``: the final assignment and the
+    centroids that produced it.  ``prefix=""`` names the CTEs plainly.
+    Declare the base ``AS MATERIALIZED``: the seeds and every assign
+    read it, and DuckDB otherwise re-derives it per reference (the
+    learned-quantizer IVF-PQ oracle, whose base is itself a k-means
+    chain, ran about 2× slower).
+
+    Generated from the SAME k/iteration constants the Spark operator
+    uses, so changing KMEANS_ITERS or PQ_ITERS cannot silently desync
+    engine and oracle (ADVICE r4)."""
+    p = f"{prefix}_" if prefix else ""
+    q = float(similarity.KMEANS_QUANT)
+    kc = "".join(f"{key}, " for key in keys)
+    pk = "".join(f"p.{key}, " for key in keys)
+    ctes = [f"""
+{p}seed_ids AS (SELECT DISTINCT vec_id FROM {p}base ORDER BY vec_id LIMIT {k}),
+{p}seeds AS (
+  SELECT {kc}vec_id AS cluster, list_transform(vq, x -> x / {q}) AS centroid
+  FROM {p}base JOIN {p}seed_ids USING (vec_id)
+)"""]
+    cents = f"{p}seeds"
+    for i in range(iters):
+        last, out = cents, f"{p}assign{i}"
+        ctes.append(_lloyd_assign_sql(f"{p}base", cents, out, keys, width, with_d2))
+        if i == iters - 1:
+            break
+        cents = f"{p}cent{i + 1}"
+        ctes.append(f"""
+{cents}_sums AS (
+  SELECT {kc}cluster, u.i AS comp, sum(vq[u.i]) AS s, count(*) AS n
+  FROM {out}, unnest(generate_series(1, {width})) AS u(i)
+  GROUP BY {kc}cluster, u.i
 ),
-seeds AS (
-  SELECT vec_id AS cluster, list_transform(vq, x -> x / {q}) AS centroid
-  FROM base ORDER BY vec_id LIMIT {k}
-),{",".join(chain)}
+{cents}_fresh AS (
+  SELECT {kc}cluster, list(s / (n * {q}) ORDER BY comp) AS centroid
+  FROM {cents}_sums GROUP BY {kc}cluster
+),
+{cents} AS (
+  SELECT {pk}p.cluster, coalesce(f.centroid, p.centroid) AS centroid
+  FROM {last} p LEFT JOIN {cents}_fresh f USING ({kc}cluster)
+)""")
+    return ",".join(ctes), f"{p}assign{iters - 1}", last
+
+
+def _kmeans_oracle() -> str:
+    chain, last_assign, _cents = _lloyd_chain("")
+    return f"""
+WITH {_vq_base_sql("base")},{chain}
 SELECT vec_id, CAST(cluster AS BIGINT) AS cluster
-FROM assign{iters - 1}
+FROM {last_assign}
 ORDER BY vec_id
 """
 
@@ -4084,73 +4148,30 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.pq_encode(emb).orderBy("vec_id", "sub")
 
 
-def _pq_chain(base_section: str | None = None) -> tuple[str, str, str]:
-    """Shared PQ training CTE chain (base/seed_ids/seeds/assign_i/
-    cent_i), loop-generated from the operator's constants; returns
-    (chain_sql, last_assign_cte, last_centroids_cte).
+def _pq_chain(
+    base_section: str | None = None, with_d2: bool = False
+) -> tuple[str, str, str]:
+    """PQ training CTE chain: the subspace-sliced ``base`` (vec_id, sub,
+    vq) then :func:`_lloyd_chain` keyed by ``sub`` with the PQ
+    constants; returns (chain_sql, last_assign_cte, last_centroids_cte).
 
     ``base_section`` overrides the leading CTEs up to and including the
-    ``base`` CTE (which must yield vec_id, sub, svq) — the IVF-PQ
-    oracle injects a residual-based base through here."""
-    m, k, iters = similarity.PQ_M, similarity.PQ_K, similarity.PQ_ITERS
-    q = float(similarity.KMEANS_QUANT)
-    dim = 64
-    sub_d = dim // m
-    d2 = (
-        "list_reduce(list_transform(generate_series(1, {sd}),"
-        " i -> (b.svq[i] / {q} - s.centroid[i]) * (b.svq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(sd=sub_d, q=q)
-
-    def assign(base: str, cents: str, out: str) -> str:
-        return f"""
-{out} AS (
-  SELECT vec_id, sub, svq, cluster FROM (
-    SELECT b.vec_id, b.sub, b.svq, s.cluster,
-           row_number() OVER (PARTITION BY b.vec_id, b.sub
-                              ORDER BY {d2}, s.cluster) AS rn
-    FROM {base} b JOIN {cents} s ON b.sub = s.sub)
-  WHERE rn = 1
-)"""
-
-    def update(assigned: str, prev: str, out: str) -> str:
-        return f"""
-{out}_sums AS (
-  SELECT sub, cluster, u.i AS comp, sum(svq[u.i]) AS s, count(*) AS n
-  FROM {assigned}, unnest(generate_series(1, {sub_d})) AS u(i)
-  GROUP BY sub, cluster, u.i
-),
-{out}_fresh AS (
-  SELECT sub, cluster, list(s / (n * {q}) ORDER BY comp) AS centroid
-  FROM {out}_sums GROUP BY sub, cluster
-),
-{out} AS (
-  SELECT p.sub, p.cluster, coalesce(f.centroid, p.centroid) AS centroid
-  FROM {prev} p LEFT JOIN {out}_fresh f USING (sub, cluster)
-)"""
-
-    # loop-generated chain driven by the operator's constants
-    chain, cents = [], "seeds"
-    for i in range(iters):
-        chain.append(assign("base", cents, f"assign{i}"))
-        if i < iters - 1:
-            chain.append(update(f"assign{i}", cents, f"cent{i + 1}"))
-            cents = f"cent{i + 1}"
+    ``base`` CTE (which must yield vec_id, sub, vq) — the IVF-PQ
+    oracles inject a residual-based base through here."""
+    m, q = similarity.PQ_M, float(similarity.KMEANS_QUANT)
+    sub_d = 64 // m
     if base_section is None:
-        base_section = f"""base AS (
+        base_section = f"""base AS MATERIALIZED (
   SELECT vec_id, u.sub AS sub,
          list_transform(generate_series(1, {sub_d}),
              i -> CAST(floor(CAST(embedding AS DOUBLE[])[u.sub * {sub_d} + i]
-                             * {q} + 0.5) AS BIGINT)) AS svq
+                             * {q} + 0.5) AS BIGINT)) AS vq
   FROM embeddings, unnest(generate_series(0, {m - 1})) AS u(sub)
 )"""
-    sql = f"""{base_section},
-seed_ids AS (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {k}),
-seeds AS (
-  SELECT sub, b.vec_id AS cluster, list_transform(svq, x -> x / {q}) AS centroid
-  FROM base b JOIN seed_ids USING (vec_id)
-),{",".join(chain)}"""
-    return sql, f"assign{iters - 1}", cents
+    chain, last_assign, cents = _lloyd_chain(
+        "", ("sub",), sub_d, with_d2, similarity.PQ_K, similarity.PQ_ITERS
+    )
+    return f"{base_section},{chain}", last_assign, cents
 
 
 def _pq_codes_oracle() -> str:
@@ -4179,18 +4200,12 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_adc_oracle(k: int = 3, n_queries: int = 10) -> str:
     chain, last_assign, cents = _pq_chain()
-    m = similarity.PQ_M
     q = float(similarity.KMEANS_QUANT)
-    sub_d = 64 // m
-    pd2 = (
-        "list_reduce(list_transform(generate_series(1, {sd}),"
-        " i -> (qs.qv[i] - s.centroid[i]) * (qs.qv[i] - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(sd=sub_d)
+    pd2 = _sq_dist_sql("qs.qv[i]", "s.centroid[i]", 64 // similarity.PQ_M)
     return f"""
 WITH {chain},
 qsubs AS (
-  SELECT vec_id AS query_id, sub, list_transform(svq, x -> x / {q}) AS qv
+  SELECT vec_id AS query_id, sub, list_transform(vq, x -> x / {q}) AS qv
   FROM base WHERE vec_id < {n_queries}
 ),
 dtab AS (
@@ -4229,24 +4244,15 @@ def emb_pq_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_sse_oracle() -> str:
-    chain, last_assign, cents = _pq_chain()
-    m = similarity.PQ_M
-    q = float(similarity.KMEANS_QUANT)
-    sub_d = 64 // m
-    d2 = (
-        "list_reduce(list_transform(generate_series(1, {sd}),"
-        " i -> (a.svq[i] / {q} - s.centroid[i]) * (a.svq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(sd=sub_d, q=q)
+    chain, last_assign, _cents = _pq_chain(with_d2=True)
     return f"""
 WITH {chain}
-SELECT CAST(a.sub AS INTEGER) AS sub,
+SELECT CAST(sub AS INTEGER) AS sub,
        CAST(count(*) AS BIGINT) AS n_vecs,
-       {hround_sql(f"sum({d2})", 4)} AS sse
-FROM {last_assign} a
-JOIN {cents} s ON s.sub = a.sub AND s.cluster = a.cluster
-GROUP BY a.sub
-ORDER BY a.sub
+       {hround_sql("sum(d2)", 4)} AS sse
+FROM {last_assign}
+GROUP BY sub
+ORDER BY sub
 """
 
 
@@ -4297,18 +4303,14 @@ resid AS (
                         i -> v[i] - {rcomp("cluster")}) AS r
   FROM coarse
 ),
-base AS (
+base AS MATERIALIZED (
   SELECT vec_id, u.sub AS sub,
          list_transform(generate_series(1, {sub_d}),
-             i -> CAST(floor(r[u.sub * {sub_d} + i] * {q} + 0.5) AS BIGINT)) AS svq
+             i -> CAST(floor(r[u.sub * {sub_d} + i] * {q} + 0.5) AS BIGINT)) AS vq
   FROM resid, unnest(generate_series(0, {m - 1})) AS u(sub)
 )"""
     chain, last_assign, cents = _pq_chain(base_section)
-    pd2 = (
-        "list_reduce(list_transform(generate_series(1, {sd}),"
-        " i -> (qs.qv[i] - s.centroid[i]) * (qs.qv[i] - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(sd=sub_d)
+    pd2 = _sq_dist_sql("qs.qv[i]", "s.centroid[i]", sub_d)
     return f"""
 WITH {chain},
 qprobes AS (
@@ -4391,34 +4393,36 @@ def sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_recall_oracle(k: int = 3, n_queries: int = 10, dim: int = 64) -> str:
-    l2 = (
-        f"list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (q.qv[i] - b.v[i]) * (q.qv[i] - b.v[i])), (x, y) -> x + y)"
-    )
-    approx = _ivfpq_oracle(k=k, n_queries=n_queries)
+def _exact_topk_sql(k: int = 3, n_queries: int = 10, dim: int = 64) -> str:
+    """(query_id, cand_id): exact squared-L2 top-k of the bounded query
+    set — the truth leg of the ANN recall oracles."""
+    l2 = _sq_dist_sql("q.qv[i]", "b.v[i]", dim)
     return f"""
-WITH exact AS (
-  WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-  q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id < {n_queries}),
+  WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < {n_queries}),
   d AS (
     SELECT q.query_id, b.vec_id AS cand_id, {hround_sql(l2, 6)} AS d2
-    FROM base b JOIN q ON b.vec_id != q.query_id
+    FROM vecs b JOIN q ON b.vec_id != q.query_id
   )
   SELECT query_id, cand_id FROM (
     SELECT *, row_number() OVER (PARTITION BY query_id
                                  ORDER BY d2, cand_id) AS rn
     FROM d) t
-  WHERE rn <= {k}
+  WHERE rn <= {k}"""
+
+
+def _recall_oracle(approx: str, k: int = 3, n_queries: int = 10) -> str:
+    """Per-query recall@k of the ``approx`` top-k oracle against exact
+    squared-L2 top-k."""
+    hit = "sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)"
+    return f"""
+WITH exact AS ({_exact_topk_sql(k, n_queries)}
 ),
 approx AS ({approx})
 SELECT e.query_id,
        CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hit,
-       {hround_sql(
-           "sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) / count(*)", 6
-       )} AS recall
+       CAST({hit} AS BIGINT) AS n_hit,
+       {hround_sql(f"{hit} / count(*)", 6)} AS recall
 FROM exact e
 LEFT JOIN approx a ON a.query_id = e.query_id AND a.cand_id = e.cand_id
 GROUP BY e.query_id
@@ -4426,7 +4430,7 @@ ORDER BY e.query_id
 """
 
 
-SIM_IVFPQ_RECALL_SQL = _ivfpq_recall_oracle()
+SIM_IVFPQ_RECALL_SQL = _recall_oracle(SIM_IVFPQ_TOPK_SQL)
 
 QUERIES["sim_ivfpq_recall"] = (sim_ivfpq_recall, SIM_IVFPQ_RECALL_SQL)
 
@@ -4443,80 +4447,19 @@ def sim_ivfpq_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivfpq_kmeans_search_topk(emb).orderBy("query_id", "rnk")
 
 
-def _kmeans_coarse_chain(
-    prefix: str = "km", source: str = "embeddings"
-) -> tuple[str, str, str]:
-    """Prefixed (CTE-chain, last-assign, last-centroids) for the
-    full-corpus Lloyd coarse quantizer, composable with _pq_chain
-    (whose injected base CTE must itself be named ``base``, so these
-    names can't collide). last-centroids = the table the FINAL
-    assignment was computed against — what the IVF index stores."""
-    kc = similarity.KMEANS_K
-    q = float(similarity.KMEANS_QUANT)
-    iters = similarity.KMEANS_ITERS
-    dim = 64
-    d2 = (
-        "list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (b.vq[i] / {q} - s.centroid[i]) * (b.vq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(dim=dim, q=q)
-
-    def assign(base: str, cents: str, out: str) -> str:
-        return f"""
-{out} AS (
-  SELECT vec_id, vq, cluster FROM (
-    SELECT b.vec_id, b.vq, s.cluster,
-           row_number() OVER (PARTITION BY b.vec_id ORDER BY {d2}, s.cluster) AS rn
-    FROM {base} b CROSS JOIN {cents} s)
-  WHERE rn = 1
-)"""
-
-    def update(assigned: str, prev: str, out: str) -> str:
-        return f"""
-{out}_sums AS (
-  SELECT cluster, u.i AS comp, sum(vq[u.i]) AS s, count(*) AS n
-  FROM {assigned}, unnest(generate_series(1, {dim})) AS u(i)
-  GROUP BY cluster, u.i
-),
-{out}_fresh AS (
-  SELECT cluster, list(s / (n * {q}) ORDER BY comp) AS centroid
-  FROM {out}_sums GROUP BY cluster
-),
-{out} AS (
-  SELECT p.cluster, coalesce(f.centroid, p.centroid) AS centroid
-  FROM {prev} p LEFT JOIN {out}_fresh f USING (cluster)
-)"""
-
-    chain, cents = [], f"{prefix}_seeds"
-    last_cents = cents
-    for i in range(iters):
-        last_cents = cents
-        chain.append(assign(f"{prefix}_base", cents, f"{prefix}_assign{i}"))
-        if i < iters - 1:
-            chain.append(update(f"{prefix}_assign{i}", cents, f"{prefix}_cent{i + 1}"))
-            cents = f"{prefix}_cent{i + 1}"
-    ctes = f"""{prefix}_base AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(floor(x * {q} + 0.5) AS BIGINT)) AS vq
-  FROM {source}
-),
-{prefix}_seeds AS (
-  SELECT vec_id AS cluster, list_transform(vq, x -> x / {q}) AS centroid
-  FROM {prefix}_base ORDER BY vec_id LIMIT {kc}
-),{",".join(chain)}"""
-    return ctes, f"{prefix}_assign{iters - 1}", last_cents
-
-
-def _ivfpq_kmeans_oracle(k: int = 3, n_queries: int = 10) -> str:
+def _ivfpq_kmeans_scored_ctes(nprobe: int, n_queries: int = 10) -> str:
+    """CTE chain shared by the learned-quantizer IVF-PQ oracles, ending
+    in ``scored`` (query_id, cand_id, adc_d2, pr): the Lloyd coarse
+    quantizer (``km_*``), residual PQ codebooks, each query's ``nprobe``
+    nearest lists with their probe rank ``pr``, and the ADC scores of
+    those lists' members (similarity.ivfpq_build_index +
+    ivfpq_score_candidates)."""
     m = similarity.PQ_M
     q = float(similarity.KMEANS_QUANT)
-    nprobe = similarity.IVF_NPROBE
-    refine = similarity.IVFPQ_REFINE
     dim = 64
     sub_d = dim // m
-    kch, ka, kc = _kmeans_coarse_chain("km")
-    base_section = f"""{kch},
+    kch, ka, kc = _lloyd_chain("km")
+    base_section = f"""{_vq_base_sql("km_base")},{kch},
 coarse AS (SELECT vec_id, vq, cluster FROM {ka}),
 resid AS (
   SELECT c.vec_id, c.cluster,
@@ -4524,77 +4467,78 @@ resid AS (
                         i -> c.vq[i] / {q} - s.centroid[i]) AS r
   FROM coarse c JOIN {kc} s USING (cluster)
 ),
-base AS (
+base AS MATERIALIZED (
   SELECT vec_id, u.sub AS sub,
          list_transform(generate_series(1, {sub_d}),
-             i -> CAST(floor(r[u.sub * {sub_d} + i] * {q} + 0.5) AS BIGINT)) AS svq
+             i -> CAST(floor(r[u.sub * {sub_d} + i] * {q} + 0.5) AS BIGINT)) AS vq
   FROM resid, unnest(generate_series(0, {m - 1})) AS u(sub)
 )"""
     chain, last_assign, cents = _pq_chain(base_section)
-    qd2 = (
-        "list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (b.vq[i] / {q} - s.centroid[i]) * (b.vq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(dim=dim, q=q)
-    pd2 = (
-        "list_reduce(list_transform(generate_series(1, {sd}),"
-        " i -> (qs.qv[i] - s.centroid[i]) * (qs.qv[i] - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(sd=sub_d)
-    return f"""
-WITH {chain},
+    return f"""{chain},
 qprobes AS (
-  SELECT query_id, cluster, centroid FROM (
+  SELECT query_id, cluster, centroid, pr FROM (
     SELECT b.vec_id AS query_id, s.cluster, s.centroid,
            ROW_NUMBER() OVER (PARTITION BY b.vec_id
-                              ORDER BY {qd2} ASC, s.cluster ASC) AS pr
+                              ORDER BY {_vq_d2_sql("b.vq", dim)} ASC,
+                                       s.cluster ASC) AS pr
     FROM km_base b CROSS JOIN {kc} s WHERE b.vec_id < {n_queries}) t
   WHERE pr <= {nprobe}
 ),
 qres AS (
-  SELECT p.query_id, p.cluster AS pcluster,
+  SELECT p.query_id, p.cluster AS pcluster, p.pr,
          list_transform(generate_series(1, {dim}),
              i -> CAST(floor((b.vq[i] / {q} - p.centroid[i]) * {q} + 0.5)
                        AS BIGINT)) AS rvq
   FROM qprobes p JOIN km_base b ON b.vec_id = p.query_id
 ),
 qsubs AS (
-  SELECT query_id, pcluster, u.sub AS sub,
+  SELECT query_id, pcluster, pr, u.sub AS sub,
          list_transform(generate_series(1, {sub_d}),
                         i -> rvq[u.sub * {sub_d} + i] / {q}) AS qv
   FROM qres, unnest(generate_series(0, {m - 1})) AS u(sub)
 ),
 dtab AS (
-  SELECT qs.query_id, qs.pcluster, qs.sub, s.cluster AS code, {pd2} AS pd2
+  SELECT qs.query_id, qs.pcluster, qs.pr, qs.sub, s.cluster AS code,
+         {_sq_dist_sql("qs.qv[i]", "s.centroid[i]", sub_d)} AS pd2
   FROM qsubs qs JOIN {cents} s ON s.sub = qs.sub
 ),
 scored AS (
   SELECT d.query_id, a.vec_id AS cand_id,
-         list_reduce(list(pd2 ORDER BY d.sub), (x, y) -> x + y) AS adc_d2
+         list_reduce(list(pd2 ORDER BY d.sub), (x, y) -> x + y) AS adc_d2,
+         MIN(d.pr) AS pr
   FROM {last_assign} a
   JOIN coarse co ON co.vec_id = a.vec_id
   JOIN dtab d ON d.pcluster = co.cluster AND d.sub = a.sub
              AND d.code = a.cluster
   WHERE a.vec_id != d.query_id
   GROUP BY d.query_id, a.vec_id
-),
+)"""
+
+
+def _refined_sql(keys: str = "") -> str:
+    """Exact squared L2 of every shortlisted (``keys``…, query_id,
+    cand_id) row of ``short`` on the original quantized vectors."""
+    q = float(similarity.KMEANS_QUANT)
+    d2 = _sq_dist_sql(f"qb.vq[i] / {q}", f"cb.vq[i] / {q}", 64)
+    return f"""refined AS (
+  SELECT {keys}s.query_id, s.cand_id, {d2} AS d2
+  FROM short s
+  JOIN km_base qb ON qb.vec_id = s.query_id
+  JOIN km_base cb ON cb.vec_id = s.cand_id
+)"""
+
+
+def _ivfpq_kmeans_oracle(k: int = 3, n_queries: int = 10) -> str:
+    return f"""
+WITH {_ivfpq_kmeans_scored_ctes(similarity.IVF_NPROBE, n_queries)},
 short AS (
   SELECT query_id, cand_id FROM (
     SELECT *, row_number() OVER (PARTITION BY query_id
                                  ORDER BY adc_d2, cand_id) AS arnk
     FROM scored) t
-  WHERE arnk <= {refine}
+  WHERE arnk <= {similarity.IVFPQ_REFINE}
 ),
-refined AS (
-  SELECT s.query_id, s.cand_id,
-         list_reduce(list_transform(generate_series(1, {dim}),
-             i -> (qb.vq[i] / {q} - cb.vq[i] / {q})
-                  * (qb.vq[i] / {q} - cb.vq[i] / {q})),
-           (x, y) -> x + y) AS d2
-  FROM short s
-  JOIN km_base qb ON qb.vec_id = s.query_id
-  JOIN km_base cb ON cb.vec_id = s.cand_id
-)
+{_refined_sql()}
 SELECT query_id, CAST(rnk AS INTEGER) AS rnk, cand_id,
        {hround_sql("d2", 6)} AS d2
 FROM (
@@ -4671,42 +4615,7 @@ def sim_ivfpq_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_kmeans_recall_oracle(k: int = 3, n_queries: int = 10, dim: int = 64) -> str:
-    l2 = (
-        f"list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (q.qv[i] - b.v[i]) * (q.qv[i] - b.v[i])), (x, y) -> x + y)"
-    )
-    approx = _ivfpq_kmeans_oracle(k=k, n_queries=n_queries)
-    return f"""
-WITH exact AS (
-  WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-  q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id < {n_queries}),
-  d AS (
-    SELECT q.query_id, b.vec_id AS cand_id, {hround_sql(l2, 6)} AS d2
-    FROM base b JOIN q ON b.vec_id != q.query_id
-  )
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY d2, cand_id) AS rn
-    FROM d) t
-  WHERE rn <= {k}
-),
-approx AS ({approx})
-SELECT e.query_id,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hit,
-       {hround_sql(
-           "sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) / count(*)", 6
-       )} AS recall
-FROM exact e
-LEFT JOIN approx a ON a.query_id = e.query_id AND a.cand_id = e.cand_id
-GROUP BY e.query_id
-ORDER BY e.query_id
-"""
-
-
-SIM_IVFPQ_KMEANS_RECALL_SQL = _ivfpq_kmeans_recall_oracle()
+SIM_IVFPQ_KMEANS_RECALL_SQL = _recall_oracle(SIM_IVFPQ_KMEANS_TOPK_SQL)
 
 QUERIES["sim_ivfpq_kmeans_recall"] = (
     sim_ivfpq_kmeans_recall,
@@ -4725,82 +4634,11 @@ def sim_ivfpq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivfpq_kmeans_recall_sweep(emb)
 
 
-def _ivfpq_sweep_oracle(k: int = 3, n_queries: int = 10, dim: int = 64) -> str:
-    m = similarity.PQ_M
-    q = float(similarity.KMEANS_QUANT)
+def _ivfpq_sweep_oracle(k: int = 3, n_queries: int = 10) -> str:
     nprobes = list(similarity.IVFPQ_SWEEP_NPROBES)
     refines = list(similarity.IVFPQ_SWEEP_REFINES)
-    max_nprobe = max(nprobes)
-    sub_d = dim // m
-    kch, ka, kc = _kmeans_coarse_chain("km")
-    base_section = f"""{kch},
-coarse AS (SELECT vec_id, vq, cluster FROM {ka}),
-resid AS (
-  SELECT c.vec_id, c.cluster,
-         list_transform(generate_series(1, {dim}),
-                        i -> c.vq[i] / {q} - s.centroid[i]) AS r
-  FROM coarse c JOIN {kc} s USING (cluster)
-),
-base AS (
-  SELECT vec_id, u.sub AS sub,
-         list_transform(generate_series(1, {sub_d}),
-             i -> CAST(floor(r[u.sub * {sub_d} + i] * {q} + 0.5) AS BIGINT)) AS svq
-  FROM resid, unnest(generate_series(0, {m - 1})) AS u(sub)
-)"""
-    chain, last_assign, cents = _pq_chain(base_section)
-    qd2 = (
-        "list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (b.vq[i] / {q} - s.centroid[i]) * (b.vq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(dim=dim, q=q)
-    pd2 = (
-        "list_reduce(list_transform(generate_series(1, {sd}),"
-        " i -> (qs.qv[i] - s.centroid[i]) * (qs.qv[i] - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(sd=sub_d)
-    l2 = (
-        f"list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (q.qv[i] - b.v[i]) * (q.qv[i] - b.v[i])), (x, y) -> x + y)"
-    )
     return f"""
-WITH {chain},
-qprobes AS (
-  SELECT query_id, cluster, centroid, pr FROM (
-    SELECT b.vec_id AS query_id, s.cluster, s.centroid,
-           ROW_NUMBER() OVER (PARTITION BY b.vec_id
-                              ORDER BY {qd2} ASC, s.cluster ASC) AS pr
-    FROM km_base b CROSS JOIN {kc} s WHERE b.vec_id < {n_queries}) t
-  WHERE pr <= {max_nprobe}
-),
-qres AS (
-  SELECT p.query_id, p.cluster AS pcluster, p.pr,
-         list_transform(generate_series(1, {dim}),
-             i -> CAST(floor((b.vq[i] / {q} - p.centroid[i]) * {q} + 0.5)
-                       AS BIGINT)) AS rvq
-  FROM qprobes p JOIN km_base b ON b.vec_id = p.query_id
-),
-qsubs AS (
-  SELECT query_id, pcluster, pr, u.sub AS sub,
-         list_transform(generate_series(1, {sub_d}),
-                        i -> rvq[u.sub * {sub_d} + i] / {q}) AS qv
-  FROM qres, unnest(generate_series(0, {m - 1})) AS u(sub)
-),
-dtab AS (
-  SELECT qs.query_id, qs.pcluster, qs.pr, qs.sub, s.cluster AS code,
-         {pd2} AS pd2
-  FROM qsubs qs JOIN {cents} s ON s.sub = qs.sub
-),
-scored AS (
-  SELECT d.query_id, a.vec_id AS cand_id,
-         list_reduce(list(pd2 ORDER BY d.sub), (x, y) -> x + y) AS adc_d2,
-         MIN(d.pr) AS pr
-  FROM {last_assign} a
-  JOIN coarse co ON co.vec_id = a.vec_id
-  JOIN dtab d ON d.pcluster = co.cluster AND d.sub = a.sub
-             AND d.code = a.cluster
-  WHERE a.vec_id != d.query_id
-  GROUP BY d.query_id, a.vec_id
-),
+WITH {_ivfpq_kmeans_scored_ctes(max(nprobes), n_queries)},
 grid AS (
   SELECT n.nprobe, r.refine_depth
   FROM (SELECT unnest({nprobes}) AS nprobe) n,
@@ -4818,16 +4656,7 @@ short AS (
     FROM cand) t
   WHERE arnk <= refine_depth
 ),
-refined AS (
-  SELECT s.nprobe, s.refine_depth, s.query_id, s.cand_id,
-         list_reduce(list_transform(generate_series(1, {dim}),
-             i -> (qb.vq[i] / {q} - cb.vq[i] / {q})
-                  * (qb.vq[i] / {q} - cb.vq[i] / {q})),
-           (x, y) -> x + y) AS d2
-  FROM short s
-  JOIN km_base qb ON qb.vec_id = s.query_id
-  JOIN km_base cb ON cb.vec_id = s.cand_id
-),
+{_refined_sql("s.nprobe, s.refine_depth, ")},
 approx AS (
   SELECT nprobe, refine_depth, query_id, cand_id FROM (
     SELECT *, row_number() OVER (
@@ -4836,16 +4665,7 @@ approx AS (
     FROM refined) t
   WHERE rnk <= {k}
 ),
-exact AS (
-  SELECT query_id, cand_id FROM (
-    SELECT q.query_id, b.vec_id AS cand_id,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {hround_sql(l2, 6)}, b.vec_id) AS rn
-    FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings) b
-    JOIN (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < {n_queries}) q
-      ON b.vec_id != q.query_id) t
-  WHERE rn <= {k}
+exact AS ({_exact_topk_sql(k, n_queries)}
 ),
 truth AS (
   SELECT g.nprobe, g.refine_depth, e.query_id, e.cand_id
@@ -4956,33 +4776,11 @@ def emb_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_drift_oracle() -> str:
-    q = float(similarity.KMEANS_QUANT)
-    dim = 64
-    kch, ka, kc = _kmeans_coarse_chain("km", source="old_emb")
-    d2 = (
-        "list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (b.vq[i] / {q} - s.centroid[i]) * (b.vq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(dim=dim, q=q)
+    kch, ka, kc = _lloyd_chain("km")
+    new_assign = _lloyd_assign_sql("new_base", kc, "new_assign")
     return f"""
-WITH old_emb AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 != 7
-),
-{kch},
-new_base AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(floor(x * {q} + 0.5) AS BIGINT)) AS vq
-  FROM embeddings WHERE vec_id % 13 != 5
-),
-new_assign AS (
-  SELECT vec_id, cluster FROM (
-    SELECT b.vec_id, s.cluster,
-           row_number() OVER (PARTITION BY b.vec_id
-                              ORDER BY {d2} ASC, s.cluster ASC) AS rn
-    FROM new_base b CROSS JOIN {kc} s) t
-  WHERE rn = 1
-),
+WITH {_vq_base_sql("km_base", "embeddings WHERE vec_id % 10 != 7")},{kch},
+{_vq_base_sql("new_base", "embeddings WHERE vec_id % 13 != 5")},{new_assign},
 oc AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_old FROM {ka}
        GROUP BY cluster),
 nc AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n_new FROM new_assign
@@ -6131,65 +5929,13 @@ def emb_kmeans_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_sse_oracle() -> str:
-    k = similarity.KMEANS_K
-    q = float(similarity.KMEANS_QUANT)
-    dim = 64
-    d2 = (
-        "list_reduce(list_transform(generate_series(1, {dim}),"
-        " i -> (b.vq[i] / {q} - s.centroid[i]) * (b.vq[i] / {q} - s.centroid[i])),"
-        " (x, y) -> x + y)"
-    ).format(dim=dim, q=q)
-
-    def assign(base: str, cents: str, out: str) -> str:
-        return f"""
-{out} AS (
-  SELECT vec_id, vq, cluster, d2 FROM (
-    SELECT b.vec_id, b.vq, s.cluster, {d2} AS d2,
-           row_number() OVER (PARTITION BY b.vec_id ORDER BY {d2}, s.cluster) AS rn
-    FROM {base} b CROSS JOIN {cents} s)
-  WHERE rn = 1
-)"""
-
-    def update(assigned: str, prev: str, out: str) -> str:
-        return f"""
-{out}_sums AS (
-  SELECT cluster, u.i AS comp, sum(vq[u.i]) AS s, count(*) AS n
-  FROM {assigned}, unnest(generate_series(1, {dim})) AS u(i)
-  GROUP BY cluster, u.i
-),
-{out}_fresh AS (
-  SELECT cluster, list(s / (n * {q}) ORDER BY comp) AS centroid
-  FROM {out}_sums GROUP BY cluster
-),
-{out} AS (
-  SELECT p.cluster, coalesce(f.centroid, p.centroid) AS centroid
-  FROM {prev} p LEFT JOIN {out}_fresh f USING (cluster)
-)"""
-
-    # same loop-generated chain as _kmeans_oracle — one iteration
-    # constant drives both engines (ADVICE r4)
-    iters = similarity.KMEANS_ITERS
-    chain, cents = [], "seeds"
-    for i in range(iters):
-        chain.append(assign("base", cents, f"assign{i}"))
-        if i < iters - 1:
-            chain.append(update(f"assign{i}", cents, f"cent{i + 1}"))
-            cents = f"cent{i + 1}"
+    chain, last_assign, _cents = _lloyd_chain("", with_d2=True)
     return f"""
-WITH base AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(floor(x * {q} + 0.5) AS BIGINT)) AS vq
-  FROM embeddings
-),
-seeds AS (
-  SELECT vec_id AS cluster, list_transform(vq, x -> x / {q}) AS centroid
-  FROM base ORDER BY vec_id LIMIT {k}
-),{",".join(chain)}
+WITH {_vq_base_sql("base")},{chain}
 SELECT CAST(cluster AS BIGINT) AS cluster,
        CAST(count(*) AS BIGINT) AS n_vecs,
        {hround_sql("sum(d2)", 4)} AS sse
-FROM assign{iters - 1}
+FROM {last_assign}
 GROUP BY cluster
 ORDER BY cluster
 """

@@ -1997,6 +1997,29 @@ class TestKmeansLloyd:
         assert "CartesianProduct" not in plan
         assert "SortMergeJoin" not in plan
 
+    def test_assign_to_centroids_matches_final_assignment(self, spark):
+        """The serving half re-derives the trainer's final assignment
+        from the centroids that produced it, vector for vector."""
+        import numpy as np
+
+        from pos_pipeline_core_etl_spark.operators.similarity import (
+            _kmeans_assignments,
+            assign_to_centroids,
+        )
+
+        rng = np.random.default_rng(23)
+        centers = rng.normal(0, 1, (3, 6))
+        vecs = np.concatenate(
+            [centers[i] + rng.normal(0, 0.8, (15, 6)) for i in range(3)]
+        )
+        rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
+        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        assigned, cents = _kmeans_assignments(df, k=3, iters=2, with_centroids=True)
+        want = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
+        got = {r["vec_id"]: r["cluster"] for r in assign_to_centroids(df, cents).collect()}
+        assert len(want) == len(vecs)
+        assert got == want
+
 
 class TestDedupSpanRemoval:
     """Keep-one duplicated-span removal (operators/dedup.py::
@@ -2145,6 +2168,27 @@ class TestProductQuantization:
         plan = pq_encode(emb)._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "SortMergeJoin" not in plan
+
+    def test_one_subspace_is_kmeans(self, spark):
+        """PQ with m=1 trains one codebook over the whole vector, which
+        is Lloyd k-means: same seeds, same labels, same codes."""
+        import numpy as np
+
+        from pos_pipeline_core_etl_spark.operators.similarity import (
+            kmeans_lloyd,
+            pq_encode,
+        )
+
+        rng = np.random.default_rng(31)
+        vecs = rng.normal(0, 1, (40, 6))
+        rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
+        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        codes = pq_encode(df, m=1, k=4, iters=3, dim=6).collect()
+        assert {r["sub"] for r in codes} == {0}
+        got = {r["vec_id"]: r["code"] for r in codes}
+        want = {r["vec_id"]: r["cluster"] for r in kmeans_lloyd(df, k=4, iters=3).collect()}
+        assert len(want) == len(vecs)
+        assert got == want
 
     def test_adc_identical_vector_ranks_first(self, spark):
         """ADC lower bound: a candidate sharing ALL the query's codes

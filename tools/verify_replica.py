@@ -3,7 +3,12 @@
 The /verify recipe (.claude/skills/verify/SKILL.md) as a standalone
 script: loads __spark_entry__.py by path, runs every registry query and
 its DuckDB oracle side-by-side, compares sorted string frames with
-normalized null spellings. Exit 0 = every query matches.
+normalized null spellings, and prints one line per entry with the Spark
+seconds (query to pandas) and the oracle seconds (DuckDB fetch), timed
+separately. Exit 0 = every query matches.
+
+VERIFY_ONLY=q1,q2,... checks only the named entries; a name that is not
+registered is printed and the script exits 2 before Spark starts.
 """
 import importlib.util, sys, time
 import duckdb, pandas as pd
@@ -11,6 +16,17 @@ import duckdb, pandas as pd
 spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
+
+queries = mod.queries()
+oracles = mod.oracle_sql()
+only = __import__("os").environ.get("VERIFY_ONLY", "")
+if only:
+    names = [s.strip() for s in only.split(",") if s.strip()]
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        print(f"VERIFY_ONLY: unknown query name(s): {', '.join(unknown)}")
+        sys.exit(2)
+    queries = {k: v for k, v in queries.items() if k in names}
 
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]")
@@ -31,22 +47,21 @@ con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 
-queries = mod.queries()
-oracles = mod.oracle_sql()
-only = __import__("os").environ.get("VERIFY_ONLY", "")
-if only:
-    names = [s.strip() for s in only.split(",") if s.strip()]
-    queries = {k: v for k, v in queries.items() if k in names}
 fails = []
 results = {}
 for name, fn in queries.items():
     try:
+        t1 = time.time()
         sdf = fn(spark, SF).toPandas()
+        spark_s = time.time() - t1
         if name not in oracles:
-            print(f"  {name}: rows-only, {len(sdf)} rows")
+            print(f"  {name}: rows-only, {len(sdf)} rows, spark {spark_s:.2f}s")
             results[name] = {"status": "rows_only", "rows": len(sdf)}
             continue
+        t1 = time.time()
         odf = con.execute(oracles[name]).fetchdf()
+        oracle_s = time.time() - t1
+        print(f"  {name}: spark {spark_s:.2f}s oracle {oracle_s:.2f}s", flush=True)
         if len(sdf) != len(odf):
             fails.append((name, f"rows {len(sdf)} vs {len(odf)}")); continue
         scols, ocols = sorted(sdf.columns), sorted(odf.columns)
