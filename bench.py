@@ -280,8 +280,12 @@ def main() -> None:
     # Warmup (excluded from timings): run every headline query once at
     # the smallest SF so the JVM, parquet footers, and — dominant at
     # local scale — the whole-stage-codegen compilation cache are hot.
-    # The timed runs then measure data-proportional work, matching how
-    # a long-lived cluster session behaves (plans compile once).
+    # The warm-up generates ~1,050 distinct classes; get_spark sizes the
+    # codegen cache (spark.sql.codegen.cache.maxEntries) to hold them.
+    # At Spark's default of 100 entries every timed rep recompiled
+    # ~1,500 evicted classes. The timed runs then measure
+    # data-proportional work plus the compiles of plans whose AQE shape
+    # differs at the bench SF.
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = SF_DIR
@@ -294,10 +298,11 @@ def main() -> None:
     # exclude)
     full_sf_warm = (*scale_path, "sim_ivfpq_query_only")
     timed = (*HEADLINE, *scale_path)
-    # SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the timed set — the
-    # isolated-pass tool for separating plan regressions from same-run
-    # contention (VERDICT r6 #2): re-measure a drifted subset without
-    # the other entries' heap/codegen pressure in the same JVM.
+    # SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the timed set: re-measure
+    # a drifted subset without the other entries' heap pressure in the
+    # same JVM. The "co-resident plan" tax it was added to isolate
+    # (VERDICT r6 #2) was in large part the 100-entry codegen cache
+    # evicting each entry's classes before its next rep.
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:
         wanted = [n.strip() for n in only.split(",") if n.strip()]

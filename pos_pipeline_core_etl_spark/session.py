@@ -49,6 +49,14 @@ def get_spark(
         # with cluster width, nothing else changes.
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
+        # Whole-stage codegen keeps compiled classes in one JVM-wide LRU of
+        # 100 entries by default, far below this engine's working set: one
+        # warm corpus_dedup benchmark pass generates 411-435 classes and one
+        # pos_refresh pass 99-135, so at 100 every pass evicted the previous
+        # pass's classes and recompiled them all. Both workloads in one
+        # session make ~520 distinct classes and the bench.py warm-up
+        # ~1,050; 2000 holds the largest of these with room to spare.
+        "spark.sql.codegen.cache.maxEntries": "2000",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",
@@ -67,3 +75,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled so far in this JVM.
+
+    Read it around a call: the delta is the call's compile count. A warm
+    re-run of a plan whose classes are still in the codegen cache
+    compiles none.
+    """
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -1,13 +1,18 @@
 """Isolated per-entry bench artifact (VERDICT r7 #2).
 
-The driver's BENCH_r{N}.json interleaves all ~34 entries in ONE JVM, so
-cheap entries absorb a heap/GC/codegen-cache tax from co-resident heavy
-plans (measured r7: 1.087x on identical code). This tool runs the same
-entries in SMALL ISOLATED BATCHES (fresh JVM per batch, grouped so no
-batch mixes the heavy dedup/ANN flagships with the sub-second entries),
-5 reps each, and writes BENCH_ISO_r{N}.json with per-entry medians +
-spreads + the batch composition — the comparable-across-rounds numbers
-PERFORMANCE.md cites.
+The driver's BENCH_r{N}.json interleaves all ~44 entries in ONE JVM. With
+Spark's default 100-entry codegen cache, each rep evicted the other
+entries' generated classes, so every rep recompiled ~1,500 of them and
+cheap entries paid a recompile tax that depended on their neighbours
+(measured r7 as a 1.087x "co-resident plan" tax on identical code).
+`session.get_spark` now sizes the cache to hold the bench's working
+set, so that tax is gone from the one-JVM run; what remains shared is
+heap/GC. This tool runs the same entries in SMALL ISOLATED BATCHES
+(fresh JVM per batch, grouped so no batch mixes the heavy dedup/ANN
+flagships with the sub-second entries), 5 reps each, and writes
+BENCH_ISO_r{N}.json with per-entry medians + spreads + the batch
+composition — the comparable-across-rounds numbers PERFORMANCE.md
+cites.
 
 Self-defense against batch-level environment artifacts (VERDICT r10
 #4; two adjudicated episodes in two rounds — r9 `dedup_mid`, r10

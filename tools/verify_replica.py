@@ -4,8 +4,11 @@ The /verify recipe (.claude/skills/verify/SKILL.md) as a standalone
 script: loads __spark_entry__.py by path, runs every registry query and
 its DuckDB oracle side-by-side, compares sorted string frames with
 normalized null spellings, and prints one line per entry with the Spark
-seconds (query to pandas) and the oracle seconds (DuckDB fetch), timed
-separately. Exit 0 = every query matches.
+seconds (query to pandas), the oracle seconds (DuckDB fetch), timed
+separately, and `compiled N`: the generated classes Janino compiled
+during the Spark call (CodegenMetrics delta), i.e. the entry's cold
+compile cost less any classes earlier entries left in the cache.
+Exit 0 = every query matches.
 
 VERIFY_ONLY=q1,q2,... checks only the named entries; a name that is not
 registered is printed and the script exits 2 before Spark starts.
@@ -35,6 +38,7 @@ spark = (SparkSession.builder.master("local[8]")
          .config("spark.driver.memory", "8g")
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
+from pos_pipeline_core_etl_spark.session import codegen_compile_count
 
 t0 = time.time()
 smoke = mod.entry(spark)
@@ -51,17 +55,18 @@ fails = []
 results = {}
 for name, fn in queries.items():
     try:
-        t1 = time.time()
+        t1, c1 = time.time(), codegen_compile_count(spark)
         sdf = fn(spark, SF).toPandas()
         spark_s = time.time() - t1
+        compiled = codegen_compile_count(spark) - c1
         if name not in oracles:
-            print(f"  {name}: rows-only, {len(sdf)} rows, spark {spark_s:.2f}s")
+            print(f"  {name}: rows-only, {len(sdf)} rows, spark {spark_s:.2f}s compiled {compiled}")
             results[name] = {"status": "rows_only", "rows": len(sdf)}
             continue
         t1 = time.time()
         odf = con.execute(oracles[name]).fetchdf()
         oracle_s = time.time() - t1
-        print(f"  {name}: spark {spark_s:.2f}s oracle {oracle_s:.2f}s", flush=True)
+        print(f"  {name}: spark {spark_s:.2f}s oracle {oracle_s:.2f}s compiled {compiled}", flush=True)
         if len(sdf) != len(odf):
             fails.append((name, f"rows {len(sdf)} vs {len(odf)}")); continue
         scols, ocols = sorted(sdf.columns), sorted(odf.columns)
